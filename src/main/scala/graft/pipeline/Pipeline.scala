@@ -66,10 +66,6 @@ final case class Pipeline(steps: Vector[Step] = Vector.empty) {
       }
     }
   }
-
-  /** Apply to any source frame by naming which columns are key/value. */
-  def run(df: DataFrame, keyCol: String, valueCol: String): DataFrame =
-    compile(df.select(col(keyCol).as("key"), col(valueCol).as("value")))
 }
 
 object Pipeline {
@@ -83,31 +79,10 @@ object Pipeline {
   * `Dataset[(K, V)]` — still distributed, still fused by Spark's
   * task pipelining, but opaque to Catalyst (so prefer [[Pipeline]]).
   * Type changes thread through the builder, replacing the reference's
-  * dynamic Lua typing with compile-time checks. */
-final class TypedPipeline[K, V] private (
-    private val f: Dataset[(K, V)] => Dataset[(K, V)]) extends Serializable {
-
-  def filter(pred: (K, V) => Boolean): TypedPipeline[K, V] =
-    new TypedPipeline(ds => f(ds).filter(kv => pred(kv._1, kv._2)))
-
-  def map[K2, V2](g: (K, V) => (K2, V2))(
-      implicit enc: Encoder[(K2, V2)]): TypedPipeline2[K, V, K2, V2] =
-    new TypedPipeline2(ds => f(ds).map(kv => g(kv._1, kv._2)))
-
-  def mapValues[V2](g: V => V2)(
-      implicit enc: Encoder[(K, V2)]): TypedPipeline2[K, V, K, V2] =
-    new TypedPipeline2(ds => f(ds).map(kv => (kv._1, g(kv._2))))
-
-  /** 0-or-1 out in one step (fused filter+map, the reference's
-    * Option-fold in a single closure). */
-  def flatMapOpt[K2, V2](g: (K, V) => Option[(K2, V2)])(
-      implicit enc: Encoder[(K2, V2)]): TypedPipeline2[K, V, K2, V2] =
-    new TypedPipeline2(ds => f(ds).flatMap(kv => g(kv._1, kv._2)))
-
-  def run(ds: Dataset[(K, V)]): Dataset[(K, V)] = f(ds)
-}
-
-/** A typed chain whose output type differs from its input type. */
+  * dynamic Lua typing with compile-time checks.
+  *
+  * `K0`/`V0` are the input record types, `K`/`V` the output ones;
+  * [[TypedPipeline]]`[K, V]` names a chain that has not changed them. */
 final class TypedPipeline2[K0, V0, K, V] private[pipeline] (
     private[pipeline] val f: Dataset[(K0, V0)] => Dataset[(K, V)])
     extends Serializable {
@@ -131,5 +106,5 @@ final class TypedPipeline2[K0, V0, K, V] private[pipeline] (
 }
 
 object TypedPipeline {
-  def apply[K, V](): TypedPipeline[K, V] = new TypedPipeline(identity)
+  def apply[K, V](): TypedPipeline[K, V] = new TypedPipeline2(identity)
 }

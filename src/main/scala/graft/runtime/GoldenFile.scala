@@ -30,17 +30,24 @@ object GoldenFile {
     val doc = spark.read.option("multiLine", true).json(path)
     val cols = doc.columns.toSet
     if (!cols.contains("inputs") || !cols.contains("expected"))
-      return Left(s"golden file $path needs top-level `inputs` and `expected` arrays")
+      Left(s"golden file $path needs top-level `inputs` and `expected` arrays")
+    else compare(pipeline, explodeRecords(doc, "inputs"), explodeRecords(doc, "expected"))
+  }
 
-    val inputs = explodeRecords(doc, "inputs")
-    val expected = explodeRecords(doc, "expected")
-
-    val actualDf = pipeline.compile(inputs, passthrough = Seq("__seq"))
-      .orderBy(col("__seq")).drop("__seq")
-    val actual = actualDf.collect().toSeq.map(canonicalRow(_, actualDf.schema))
-    val expSchema = expected.drop("__seq").schema
-    val exp = expected.orderBy(col("__seq")).drop("__seq")
-      .collect().toSeq.map(canonicalRow(_, expSchema))
+  /** Run `pipeline` over the `(key, value)` frame `inputs` and compare
+    * its output, in input order, with the `(key, value)` frame
+    * `expected`. Fields match by name, not position. Right(n) = n records
+    * matched; Left(msg) = the count or the first record differs. */
+  def compare(pipeline: Pipeline, inputs: DataFrame, expected: DataFrame): Either[String, Int] = {
+    // A monotonic `__seq` rides through the chain as a passthrough
+    // column, so the collected output can be put back in input order.
+    def numbered(df: DataFrame) = df.withColumn("__seq", monotonically_increasing_id())
+    def canonicalInOrder(df: DataFrame): Seq[Map[String, Any]] = {
+      val rows = df.orderBy(col("__seq")).drop("__seq")
+      rows.collect().toSeq.map(canonicalRow(_, rows.schema))
+    }
+    val actual = canonicalInOrder(pipeline.compile(numbered(inputs), passthrough = Seq("__seq")))
+    val exp = canonicalInOrder(numbered(expected))
 
     if (actual.size != exp.size)
       Left(s"expected ${exp.size} output records, got ${actual.size}: " +
@@ -51,23 +58,22 @@ object GoldenFile {
     }.toLeft(actual.size)
   }
 
-  /** One row per array element, as a (key, value, __seq) frame; a
-    * missing `key`/`value` field becomes a null column. An EMPTY array
-    * (the natural way to assert "all inputs drop") infers a non-struct
-    * element type — yield an empty frame instead of crashing. */
+  /** One row per array element, in array order, as a (key, value)
+    * frame; a missing `key`/`value` field becomes a null column. An EMPTY
+    * array (the natural way to assert "all inputs drop") infers a
+    * non-struct element type — yield an empty frame instead of crashing. */
   private def explodeRecords(doc: DataFrame, field: String): DataFrame = {
-    val exploded = doc.select(posexplode(col(field)).as(Seq("__seq", "rec")))
+    val exploded = doc.select(explode(col(field)).as("rec"))
     exploded.schema("rec").dataType match {
       case recType: StructType =>
         def pick(name: String) =
           if (recType.fieldNames.contains(name)) col(s"rec.$name").as(name)
           else lit(null).cast(StringType).as(name)
-        exploded.select(pick("key"), pick("value"), col("__seq"))
+        exploded.select(pick("key"), pick("value"))
       case _ =>
         exploded.where(lit(false)).select(
           lit(null).cast(StringType).as("key"),
-          lit(null).cast(StringType).as("value"),
-          col("__seq"))
+          lit(null).cast(StringType).as("value"))
     }
   }
 
@@ -75,12 +81,11 @@ object GoldenFile {
     * null entries (null == absent, the Lua-table semantic), arrays ->
     * vectors, binary -> byte vector. Numeric equality is VALUE-based:
     * widths widen (all finite numerics -> an exact BigDecimal canonical
-    * form, [[graft.verify.Golden.widen]]) so long 5 == double 5.0 —
-    * exactly the reference's luaj semantics (its deepEq coerces
-    * 1 == 1.0) — without cooperative equality's >2^53 lossiness. Golden
-    * JSON always parses numbers as long/double, so a pipeline
-    * producing int 5 matches an expected 5; only different VALUES
-    * mismatch. */
+    * form, [[widen]]) so long 5 == double 5.0 — exactly the reference's
+    * luaj semantics (its deepEq coerces 1 == 1.0) — without cooperative
+    * equality's >2^53 lossiness. Golden JSON always parses numbers as
+    * long/double, so a pipeline producing int 5 matches an expected 5;
+    * only different VALUES mismatch. */
   def canonicalRow(r: Row, schema: StructType): Map[String, Any] =
     canonical(r, schema).asInstanceOf[Map[String, Any]]
 
@@ -98,6 +103,25 @@ object GoldenFile {
         k.toString -> canonical(mv, mt.valueType)
       }.sortBy(_._1): _*)
     case (b: Array[Byte], _) => b.toVector
-    case (x, _) => graft.verify.Golden.widen(x)
+    case (x, _) => widen(x)
+  }
+
+  /** All finite numerics canonicalize to [[scala.math.BigDecimal]],
+    * whose equality is numeric-EXACT: int 5 == long 5 == double 5.0
+    * still hold (luaj's deepEq coercion), but Long-vs-Double no longer
+    * routes through Scala cooperative equality's lossy Long→Double
+    * conversion, which above 2^53 made DISTINCT values compare equal
+    * (Long.MaxValue == 9.223372036854776e18) — a silent false-match
+    * window for 64-bit fingerprint goldens. NaN/Infinity cannot be
+    * BigDecimals and stay on the double path (NaN != NaN, Inf == Inf). */
+  private def widen(v: Any): Any = v match {
+    case b: java.lang.Byte => BigDecimal(b.longValue)
+    case s: java.lang.Short => BigDecimal(s.longValue)
+    case i: java.lang.Integer => BigDecimal(i.longValue)
+    case l: java.lang.Long => BigDecimal(l.longValue)
+    case f: java.lang.Float if !f.isNaN && !f.isInfinite => BigDecimal(f.doubleValue)
+    case d: java.lang.Double if !d.isNaN && !d.isInfinite => BigDecimal(d.doubleValue)
+    case f: java.lang.Float => f.doubleValue
+    case other => other
   }
 }

@@ -33,9 +33,16 @@ import graft.serde.KeyValueMapping
   *   --stream           Structured Streaming (file source) instead of
   *                      batch; needs --checkpoint for restartability
   *   --once             streaming trigger AvailableNow: process what's
-  *                      there, then stop (CI/backfill mode)
-  *   --checkpoint <dir> streaming checkpoint location
+  *                      there, then stop (CI/backfill mode; --stream only)
+  *   --checkpoint <dir> streaming checkpoint location (--stream only)
   * }}}
+  *
+  * Batch and stream share one build path: the source is a data-source
+  * format, its options and a path, read with `spark.read` or
+  * `spark.readStream`; the chain (decode, script steps, encode) is built
+  * once over whichever frame that gives; the sink is the same format and
+  * options through `write` or `writeStream`. Only the reader and writer
+  * entry points differ between the modes.
   *
   * Kafka parity (reference Plumber.scala:62-74): `-i kafka:<topic>` /
   * `-o kafka:<topic>` select the Spark Kafka connector, configured via
@@ -91,6 +98,8 @@ object Main {
         Left("-i and -o are required unless --dry-run")
       else if (a.dryRun && a.test.isEmpty)
         Left("--dry-run needs -t <golden.json>")
+      else if (!a.stream && (a.once || a.checkpoint.nonEmpty))
+        Left("--once and --checkpoint need --stream")
       else Right(a)
     }
   }
@@ -114,49 +123,33 @@ object Main {
       Some(path.stripPrefix("kafka:").stripPrefix("//"))
     else None
 
+  private def kafkaBrokers(role: String, props: Properties): Either[String, String] =
+    Option(props.getProperty("graft.kafka.brokers"))
+      .toRight(s"kafka $role needs graft.kafka.brokers=<host:port,...> in -p properties")
+
   /** Connector options for a Kafka source (reference Plumber.scala:62-65
     * semantics: one subscribed topic, brokers from properties). */
   private[runtime] def kafkaSourceOptions(topic: String,
       props: Properties): Either[String, Map[String, String]] =
-    Option(props.getProperty("graft.kafka.brokers")) match {
-      case None => Left("kafka source needs graft.kafka.brokers=<host:port,...> in -p properties")
-      case Some(brokers) => Right(Map(
-        "kafka.bootstrap.servers" -> brokers,
-        "subscribe" -> topic,
-        "startingOffsets" ->
-          Option(props.getProperty("graft.kafka.starting.offsets")).getOrElse("earliest"),
-        "failOnDataLoss" ->
-          Option(props.getProperty("graft.kafka.fail.on.data.loss")).getOrElse("true")))
-    }
+    kafkaBrokers("source", props).map(brokers => Map(
+      "kafka.bootstrap.servers" -> brokers,
+      "subscribe" -> topic,
+      "startingOffsets" ->
+        Option(props.getProperty("graft.kafka.starting.offsets")).getOrElse("earliest"),
+      "failOnDataLoss" ->
+        Option(props.getProperty("graft.kafka.fail.on.data.loss")).getOrElse("true")))
 
   /** Connector options for a Kafka sink (Plumber.scala:71-74). */
   private[runtime] def kafkaSinkOptions(topic: String,
       props: Properties): Either[String, Map[String, String]] =
-    Option(props.getProperty("graft.kafka.brokers")) match {
-      case None => Left("kafka sink needs graft.kafka.brokers=<host:port,...> in -p properties")
-      case Some(brokers) => Right(Map(
-        "kafka.bootstrap.servers" -> brokers,
-        "topic" -> topic))
-    }
+    kafkaBrokers("sink", props).map(brokers => Map(
+      "kafka.bootstrap.servers" -> brokers,
+      "topic" -> topic))
 
-  /** Read a file source as a canonical (key, value) frame. `fmt` has
-    * been validated against [[fileFormats]] by the caller. */
-  private def readFrame(spark: SparkSession, path: String,
-      serde: Option[String], fmt: String): DataFrame = {
-    val raw = fmt match {
-      case "parquet" => spark.read.parquet(path)
-      case "json" => spark.read.json(path)
-      case "csv" => spark.read.option("header", "true").csv(path)
-      case "text" => spark.read.text(path)
-    }
-    frameify(raw, serde)
-  }
-
-  private[runtime] def frameify(raw: DataFrame, serde: Option[String]): DataFrame =
+  private[runtime] def frameify(raw: DataFrame, serde: Option[KeyValueMapping]): DataFrame =
     serde match {
-      case Some(decl) =>
+      case Some(kv) =>
         // Kafka-shaped binary frame expected; absent key column = void key.
-        val kv = KeyValueMapping.fromString(decl)
         val withKey =
           if (raw.columns.contains("key")) raw
           else raw.withColumn("key", lit(null).cast(BinaryType))
@@ -190,8 +183,32 @@ object Main {
     }
   }
 
-  /** Run with an existing session; returns a process exit code
-    * (0 ok, 1 golden mismatch / runtime failure, 2 usage). */
+  /** A source or sink: a Spark data-source format, its options, and a
+    * path (`None` for a Kafka topic, whose options name it). */
+  private final case class Endpoint(format: String, options: Map[String, String],
+      path: Option[String])
+
+  /** Resolve `-i` (`role` input) or `-o` (output): `kafka:<topic>` takes
+    * its connector options from `kafkaOptions`; a file takes its format
+    * from the `graft.<role>.format` property or the path, with
+    * `header=true` for csv. */
+  private def endpoint(path: String, role: String, props: Properties,
+      kafkaOptions: (String, Properties) => Either[String, Map[String, String]])
+      : Either[String, Endpoint] =
+    kafkaTopic(path) match {
+      case Some(topic) => kafkaOptions(topic, props).map(Endpoint("kafka", _, None))
+      case None =>
+        val fmt = Option(props.getProperty(s"graft.$role.format")).getOrElse(formatOf(path))
+        if (!fileFormats(fmt))
+          Left(s"unknown $role format `$fmt` (expected ${fileFormats.mkString("|")})")
+        else Right(Endpoint(fmt, if (fmt == "csv") Map("header" -> "true") else Map.empty,
+          Some(path)))
+    }
+
+  /** Run with an existing session; returns a process exit code: 0 ok,
+    * 1 golden mismatch, 2 usage or input error (bad flags, an unreadable
+    * script, properties or schema file, a bad serde declaration, an
+    * unknown format). A failing Spark job throws. */
   def run(spark: SparkSession, argv: Array[String]): Int =
     parseArgs(argv) match {
       case Left(err) =>
@@ -200,13 +217,22 @@ object Main {
     }
 
   private def runParsed(spark: SparkSession, args: Args): Int = {
-    val props = loadProperties(args.props)
+    def usage(msg: String): Int = { System.err.println(s"[graft] $msg"); 2 }
+
+    // Every input is read and parsed here, before any Spark work, so a
+    // bad one is a usage error rather than an exception mid-run.
+    val (props, pipeline, inSerde, outSerde) =
+      try (loadProperties(args.props), GraftScript.parseFile(args.script.get),
+        args.inputSerde.map(KeyValueMapping.fromString),
+        args.outputSerde.map(KeyValueMapping.fromString))
+      catch {
+        case e: java.io.IOException => return usage(s"cannot read ${e.getMessage}")
+        case e @ (_: GraftScript.ScriptError | _: IllegalArgumentException |
+            _: org.apache.avro.SchemaParseException) => return usage(e.getMessage)
+      }
     props.stringPropertyNames().forEach { k =>
       if (k.startsWith("spark.")) spark.conf.set(k, props.getProperty(k))
     }
-    def opt(key: String): Option[String] = Option(props.getProperty(key))
-
-    val pipeline = GraftScript.parseFile(args.script.get)
 
     // Golden pre-pass gates startup (Plumber.scala:41-55 semantics).
     args.test.foreach { goldenPath =>
@@ -220,101 +246,55 @@ object Main {
     }
     if (args.dryRun) return 0
 
-    val inPath = args.input.get
-    val outPath = args.output.get
-    val inKafka = kafkaTopic(inPath)
-    val outKafka = kafkaTopic(outPath)
+    val (src, dst) = (for {
+      s <- endpoint(args.input.get, "input", props, kafkaSourceOptions)
+      d <- endpoint(args.output.get, "output", props, kafkaSinkOptions)
+    } yield (s, d)) match {
+      case Left(err) => return usage(err)
+      case Right(sd) => sd
+    }
+    // A kafka:<topic> output is not a filesystem path — deriving a
+    // default checkpoint from it would crash at start with a scheme
+    // error; require an explicit one instead.
+    if (args.stream && dst.path.isEmpty && args.checkpoint.isEmpty)
+      return usage("streaming to a kafka sink needs --checkpoint <dir>")
 
-    // Validate file formats up front so misconfiguration is a clean
-    // usage error (exit 2), not a MatchError deep in a branch.
-    def usage(msg: String): Int = { System.err.println(s"[graft] $msg"); 2 }
-    val inFmt = opt("graft.input.format").getOrElse(formatOf(inPath))
-    if (inKafka.isEmpty && !fileFormats(inFmt))
-      return usage(s"unknown input format `$inFmt` (expected ${fileFormats.mkString("|")})")
-    val outFmt = opt("graft.output.format").getOrElse(formatOf(outPath))
-    if (outKafka.isEmpty && !fileFormats(outFmt))
-      return usage(s"unknown output format `$outFmt` (expected ${fileFormats.mkString("|")})")
+    // Source. A streamed file source takes its schema from a batch read
+    // of the same source (the FileStreamSource needs one); the Kafka
+    // frame has a fixed schema, of which the chain needs (key, value).
+    val batch = spark.read.format(src.format).options(src.options)
+    def stream = spark.readStream.format(src.format).options(src.options)
+    val raw = src.path match {
+      case Some(p) => if (args.stream) stream.schema(batch.load(p).schema).load(p) else batch.load(p)
+      case None => (if (args.stream) stream.load() else batch.load()).select(col("key"), col("value"))
+    }
 
+    val chained = pipeline.compile(frameify(raw, inSerde))
+    val encoded = outSerde.fold(chained)(_.encode(chained))
+    val out = if (dst.format == "text") forTextSink(encoded) else encoded
+
+    // Sink. Batch files overwrite; Kafka keeps Spark's default mode.
     if (!args.stream) {
-      val frame = inKafka match {
-        case Some(topic) =>
-          kafkaSourceOptions(topic, props) match {
-            case Left(err) => return usage(err)
-            case Right(o) => frameify(
-              spark.read.format("kafka").options(o).load()
-                .select(col("key"), col("value")), args.inputSerde)
-          }
-        case None => readFrame(spark, inPath, args.inputSerde, inFmt)
-      }
-      val out = encode(pipeline.compile(frame), args.outputSerde)
-      outKafka match {
-        case Some(topic) =>
-          kafkaSinkOptions(topic, props) match {
-            case Left(err) => return usage(err)
-            case Right(o) => out.write.format("kafka").options(o).save()
-          }
-        case None => writeBatch(out, outFmt, outPath)
-      }
+      val writer = out.write.format(dst.format).options(dst.options)
+      dst.path.fold(writer.save())(writer.mode("overwrite").save)
       0
     } else {
-      // Streaming: same pipeline over readStream, checkpointed sink,
-      // graceful shutdown (Plumber.scala:77-85 semantics). File sources
-      // use the batch-inferred schema (the FileStreamSource needs one);
-      // the Kafka source has a fixed frame schema.
-      val raw = inKafka match {
-        case Some(topic) =>
-          kafkaSourceOptions(topic, props) match {
-            case Left(err) => return usage(err)
-            case Right(o) => spark.readStream.format("kafka").options(o)
-              .load().select(col("key"), col("value"))
-          }
-        case None =>
-          val schema = (inFmt match {
-            case "parquet" => spark.read.parquet(inPath)
-            case "json" => spark.read.json(inPath)
-            case "csv" => spark.read.option("header", "true").csv(inPath)
-            case "text" => spark.read.text(inPath)
-          }).schema
-          inFmt match {
-            case "parquet" => spark.readStream.schema(schema).parquet(inPath)
-            case "json" => spark.readStream.schema(schema).json(inPath)
-            case "csv" => spark.readStream.schema(schema)
-              .option("header", "true").csv(inPath)
-            case "text" => spark.readStream.schema(schema).text(inPath)
-          }
-      }
-      val out = encode(pipeline.compile(frameify(raw, args.inputSerde)),
-        args.outputSerde)
-      val writer = outKafka match {
-        case Some(topic) =>
-          kafkaSinkOptions(topic, props) match {
-            case Left(err) => return usage(err)
-            case Right(o) => out.writeStream.format("kafka").options(o)
-          }
-        case None =>
-          val base = (if (outFmt == "text") forTextSink(out) else out)
-            .writeStream.format(outFmt)
-          base.option("path", outPath)
-      }
-      // A kafka:<topic> output is not a filesystem path — deriving a
-      // default checkpoint from it would crash at start with a scheme
-      // error; require an explicit one instead.
-      if (outKafka.isDefined && args.checkpoint.isEmpty)
-        return usage("streaming to a kafka sink needs --checkpoint <dir>")
-      val query = writer
+      // Checkpointed sink, graceful shutdown (Plumber.scala:77-85).
+      val writer = out.writeStream.format(dst.format).options(dst.options)
+      val query = dst.path.fold(writer)(writer.option("path", _))
         .option("checkpointLocation",
-          args.checkpoint.getOrElse(outPath.stripSuffix("/") + "_checkpoint"))
+          args.checkpoint.getOrElse(args.output.get.stripSuffix("/") + "_checkpoint"))
         .trigger(if (args.once) Trigger.AvailableNow() else
           Trigger.ProcessingTime(0))
         .start()
       val hook = sys.addShutdownHook { query.stop() } // SIGTERM drains
       try { query.awaitTermination(); 0 }
-      finally hook.remove()
+      finally
+        // Once SIGTERM has started JVM shutdown the hook is already
+        // running and can no longer be removed.
+        try hook.remove() catch { case _: IllegalStateException => }
     }
   }
-
-  private def encode(df: DataFrame, serde: Option[String]): DataFrame =
-    serde.map(d => KeyValueMapping.fromString(d).encode(df)).getOrElse(df)
 
   /** Spark's text sink takes exactly one string column: write `value`
     * (cast to string), mirroring a value-only Kafka producer. */
@@ -323,14 +303,6 @@ object Main {
       "text output needs a `value` column in the pipeline result")
     df.select(col("value").cast(StringType).as("value"))
   }
-
-  private def writeBatch(df: DataFrame, fmt: String, path: String): Unit =
-    fmt match {
-      case "parquet" => df.write.mode("overwrite").parquet(path)
-      case "json" => df.write.mode("overwrite").json(path)
-      case "csv" => df.write.mode("overwrite").option("header", "true").csv(path)
-      case "text" => forTextSink(df).write.mode("overwrite").text(path)
-    }
 
   def main(argv: Array[String]): Unit = {
     val builder = SparkSession.builder()

@@ -6,14 +6,22 @@ import org.apache.spark.sql.types._
 
 import graft.SparkSpecBase
 import graft.functions.TimeFunctions
-import graft.verify.{Golden, GoldenMismatch}
+import graft.runtime.GoldenFile
 
 /** Ports of the reference's three worked examples (executable specs,
   * SURVEY §2.4) and the 7-step chaining suite
   * (ChainingOperationsTest.scala:9-49). Same inputs, same outputs, same
-  * drop behavior — via the golden-verify harness, i.e. each test also
-  * exercises the `forInputs/expectOutputs` pre-pass semantics. */
+  * drop behavior — via the golden pre-pass compare
+  * ([[GoldenFile.compare]]), i.e. each test also exercises the
+  * `forInputs/expectOutputs` pre-pass semantics. That compare matches
+  * fields by name, so every expected frame carries an explicit schema. */
 class PipelineSpec extends SparkSpecBase {
+
+  private def frame(schema: StructType, rows: Row*) =
+    spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
+
+  private def kv(key: DataType, value: DataType) = StructType(Seq(
+    StructField("key", key), StructField("value", value)))
 
   // --- demo example: Avro->Avro mapValues restructure -------------------
   // reference: examples/demo/example.lua:1-7, example.test.lua:1-31
@@ -36,30 +44,26 @@ class PipelineSpec extends SparkSpecBase {
       (!v.getField("notValid")).as("valid"),
       lower(v.getField("person").getField("name")).as("name"),
       (v.getField("fingers_lh") + v.getField("fingers_rh")).as("fingers")))
-    val inSchema = StructType(Seq(
-      StructField("key", NullType), StructField("value", undesired)))
-    val out = Golden.verify(spark, pipe,
-      Seq(
+    val desired = StructType(Seq(StructField("valid", BooleanType),
+      StructField("name", StringType), StructField("fingers", LongType)))
+    val out = GoldenFile.compare(pipe,
+      frame(kv(NullType, undesired),
         demoInput(42, false, 5, 5, "Roel", "homo sapiens"),
         demoInput(43, true, 5, 6, "Ewout", "homo sapiens")),
-      inSchema,
-      Seq(
+      frame(kv(NullType, desired),
         Row(null, Row(true, "roel", 5L + 5L)),
         Row(null, Row(false, "ewout", 11L))))
-    assert(out.size == 2)
+    assert(out == Right(2))
   }
 
   test("golden mismatch is detected and refuses (pre-pass semantics)") {
     val pipe = Pipeline().mapValues(v => struct(
       (!v.getField("notValid")).as("valid")))
-    val inSchema = StructType(Seq(
-      StructField("key", NullType), StructField("value", undesired)))
-    intercept[GoldenMismatch] {
-      Golden.verify(spark, pipe,
-        Seq(demoInput(42, false, 5, 5, "Roel", "x")),
-        inSchema,
-        Seq(Row(null, Row(false)))) // wrong: should be true
-    }
+    val out = GoldenFile.compare(pipe,
+      frame(kv(NullType, undesired), demoInput(42, false, 5, 5, "Roel", "x")),
+      frame(kv(NullType, StructType(Seq(StructField("valid", BooleanType)))),
+        Row(null, Row(false)))) // wrong: should be true
+    assert(out.left.exists(_.contains("record 0 mismatch")), out)
   }
 
   // --- time example: string,string -> long,long with drop ---------------
@@ -69,17 +73,15 @@ class PipelineSpec extends SparkSpecBase {
     val pipe = Pipeline()
       .filter((_, v) => v.try_cast(LongType).isNotNull)
       .map((k, v) => (TimeFunctions.iso8601ToUnixMillis(k), v.try_cast(LongType)))
-    val inSchema = StructType(Seq(
-      StructField("key", StringType), StructField("value", StringType)))
-    Golden.verify(spark, pipe,
-      Seq(
+    val out = GoldenFile.compare(pipe,
+      frame(kv(StringType, StringType),
         Row("2016-05-13T16:43:12.345+00:00", "42"),
         Row("2014-11-24T23:16:42.345+01:00", "three"), // dropped
         Row("2016-05-13T16:43:13.37Z", "37")),
-      inSchema,
-      Seq(
+      frame(kv(LongType, LongType),
         Row(1463157792345L, 42L),
         Row(1463157793370L, 37L)))
+    assert(out == Right(2), out)
   }
 
   // --- csv example: string -> struct with nullable field, 3 drops -------
@@ -94,19 +96,19 @@ class PipelineSpec extends SparkSpecBase {
         element_at(v, 2).as("created_at"),
         when(element_at(v, 3) === "", lit(null)).otherwise(element_at(v, 3)).as("blog"),
         element_at(v, 4).try_cast(LongType).as("public_repos")))
-    val inSchema = StructType(Seq(
-      StructField("key", NullType), StructField("value", StringType)))
-    Golden.verify(spark, pipe,
-      Seq(
+    val user = StructType(Seq("login", "created_at", "blog")
+      .map(StructField(_, StringType)) :+ StructField("public_repos", LongType))
+    val out = GoldenFile.compare(pipe,
+      frame(kv(NullType, StringType),
         Row(null, "rollulus,2015-01-14T07:36:24Z,https://keybase.io/rollulus,8"),
         Row(null, "eneco,2012-09-13T09:16:29Z,,4"),
         Row(null, "not,enough,columns"),
         Row(null, ""),
         Row(null, "a,b,c,notanumber")),
-      inSchema,
-      Seq(
+      frame(kv(NullType, user),
         Row(null, Row("rollulus", "2015-01-14T07:36:24Z", "https://keybase.io/rollulus", 8L)),
         Row(null, Row("eneco", "2012-09-13T09:16:29Z", null, 4L))))
+    assert(out == Right(2), out)
   }
 
   // --- chaining: 7-step chain, key predicates, all drop paths -----------
@@ -123,19 +125,17 @@ class PipelineSpec extends SparkSpecBase {
       .filter((k, _) => substring(k, 5, 1) === "O") // k:byte(-1)==79 i.e. 'O'
       .map((k, v) => (upper(k), struct(v.getField("i").as("j"))))
       .filter((_, v) => v.getField("j") > 0)
-    val inSchema = StructType(Seq(
-      StructField("key", StringType),
-      StructField("value", StructType(Seq(StructField("i", IntegerType))))))
-    Golden.verify(spark, pipe,
-      Seq(
+    val out = GoldenFile.compare(pipe,
+      frame(kv(StringType, StructType(Seq(StructField("i", IntegerType)))),
         Row("helloO", Row(3)),   // dropped: length 6
         Row("heyO", Row(3)),     // dropped: length 4
         Row("helUo", Row(3)),    // dropped: last char not O
         Row("hellO", Row(0)),    // dropped: i*2 == 0
         Row("hellO", Row(-3)),   // dropped: j = -5 < 0
         Row("hellO", Row(3))),   // kept: -> ("HELLO", j=7)
-      inSchema,
-      Seq(Row("HELLO", Row(7))))
+      frame(kv(StringType, StructType(Seq(StructField("j", IntegerType)))),
+        Row("HELLO", Row(7))))
+    assert(out == Right(1), out)
   }
 
   // --- typed lambda path -----------------------------------------------

@@ -71,6 +71,27 @@ class RuntimeSpec extends SparkSpecBase with Matchers {
     Main.run(spark, Array("-t", "x.json", "-D")) shouldBe 2 // no -l
     Main.run(spark, Array("-l", "p.graft")) shouldBe 2      // no -i/-o
     Main.run(spark, Array("--bogus")) shouldBe 2
+    // input errors are usage errors too, not exceptions: a script that
+    // does not parse, bad -d/-s declarations, missing -l/-p/.avsc files
+    val io = Array("-i", s"$ex/time/input", "-o", tmp() + "/out")
+    val bad = Files.createTempFile("bad", ".graft")
+    Files.writeString(bad, "explode value\n")
+    Main.run(spark, io ++ Array("-l", bad.toString)) shouldBe 2
+    val time = Array("-l", s"$ex/time/pipeline.graft")
+    Main.run(spark, io ++ time ++ Array("-d", "bogus")) shouldBe 2
+    Main.run(spark, io ++ time ++ Array("-s", "long,long,long")) shouldBe 2
+    // serdes parse before the golden pre-pass, so a dry run checks them
+    Main.run(spark, time ++ Array("-t", s"$ex/time/golden.json", "-D",
+      "-s", "bogus")) shouldBe 2
+    Main.run(spark, io ++ Array("-l", "/nonexistent/p.graft")) shouldBe 2
+    Main.run(spark, io ++ time ++ Array("-p", "/nonexistent/g.properties")) shouldBe 2
+    Main.run(spark, io ++ time ++ Array("-s", "avro=/nonexistent/s.avsc")) shouldBe 2
+    val badAvsc = Files.createTempFile("bad", ".avsc")
+    Files.writeString(badAvsc, "{not a schema")
+    Main.run(spark, io ++ time ++ Array("-s", s"avro=$badAvsc")) shouldBe 2
+    // stream-only flags without --stream would be silently ignored
+    Main.run(spark, io ++ time :+ "--once") shouldBe 2
+    Main.run(spark, io ++ time ++ Array("--checkpoint", tmp())) shouldBe 2
   }
 
   test("unknown input/output formats are usage errors (exit 2), not crashes") {
@@ -224,6 +245,77 @@ class RuntimeSpec extends SparkSpecBase with Matchers {
       .orderBy("k").collect()
     back.map(r => (r.getLong(0), r.getLong(1))).toSeq shouldBe
       Seq((1463157792345L, 42L), (1463157793370L, 37L))
+  }
+
+  /** Runs `argv` to `out` in batch and as `--stream --once`; both must
+    * succeed, and the decoded rows of each, sorted, are returned. */
+  private def batchAndStream(argv: Array[String],
+      decode: org.apache.spark.sql.DataFrame => Seq[String]): (Seq[String], Seq[String]) = {
+    val (batch, stream) = (tmp() + "/batch", tmp() + "/stream")
+    Main.run(spark, argv ++ Array("-o", batch)) shouldBe 0
+    Main.run(spark, argv ++ Array("-o", stream,
+      "--stream", "--once", "--checkpoint", tmp() + "/ckpt")) shouldBe 0
+    (decode(spark.read.parquet(batch)).sorted, decode(spark.read.parquet(stream)).sorted)
+  }
+
+  test("streaming a text source matches batch (csv example, avro sink)") {
+    val m = AvroMapping(avroSchema(s"$ex/csv/schema.avsc"))
+    val (batch, stream) = batchAndStream(Array("-i", s"$ex/csv/input",
+      "-l", s"$ex/csv/pipeline.graft", "-s", s"avro=$ex/csv/schema.avsc"),
+      _.select(m.decode(col("value")).as("v")).select("v.*").collect().toSeq.map(_.toString))
+    batch shouldBe Seq("[dudebowski,2012-09-03T11:33:46Z,null,2]",
+      "[rollulus,2015-01-14T07:36:24Z,https://keybase.io/rollulus,8]")
+    stream shouldBe batch
+  }
+
+  test("streaming a csv source with a header row matches batch") {
+    val in = tmp()
+    Files.writeString(java.nio.file.Paths.get(in, "people.csv"),
+      "name,age\nann,31\nbob,x\ncarol,5\n")
+    val script = Files.createTempFile("csv-header", ".graft")
+    Files.writeString(script,
+      "filter try_cast(value.age as long) is not null\n" +
+        "mapValues named_struct('name', upper(value.name), 'age', try_cast(value.age as long))\n")
+    val (batch, stream) = batchAndStream(Array("-i", in, "-l", script.toString),
+      _.select("value.*").collect().toSeq.map(_.toString))
+    batch shouldBe Seq("[ANN,31]", "[CAROL,5]") // the header row is no record
+    stream shouldBe batch
+  }
+
+  test("SIGTERM drains a running stream without a shutdown-hook error") {
+    // A forked CLI JVM streams examples/time until its first committed
+    // micro-batch, then gets SIGTERM. The shutdown hook stops the query;
+    // Main must not then try to remove that hook, which the JVM refuses
+    // once shutdown is in progress.
+    import scala.jdk.CollectionConverters._
+    val dir = tmp()
+    val jvmArgs = java.lang.management.ManagementFactory.getRuntimeMXBean
+      .getInputArguments.asScala.toIndexedSeq
+    val opens = jvmArgs.indices.flatMap { i =>
+      if (jvmArgs(i).startsWith("--add-opens=")) Seq(jvmArgs(i))
+      else if (jvmArgs(i) == "--add-opens") jvmArgs.slice(i, i + 2)
+      else Nil
+    }
+    val cmd = Seq(s"${System.getProperty("java.home")}/bin/java", "-Xmx1g",
+      "-Dspark.master=local[2]", "-Dspark.ui.enabled=false") ++ opens ++
+      Seq("-cp", System.getProperty("java.class.path"), "graft.runtime.Main",
+        "-i", s"$ex/time/input", "-o", s"$dir/out",
+        "-l", s"$ex/time/pipeline.graft", "-s", "long,long",
+        "--stream", "--checkpoint", s"$dir/ckpt")
+    val stderr = new java.io.File(dir, "stderr.txt")
+    val proc = new ProcessBuilder(cmd: _*)
+      .redirectOutput(new java.io.File(dir, "stdout.txt"))
+      .redirectError(stderr).start()
+    try {
+      val committed = new java.io.File(s"$dir/ckpt/commits/0")
+      val deadline = System.currentTimeMillis() + 120000
+      while (!committed.exists() && proc.isAlive && System.currentTimeMillis() < deadline)
+        Thread.sleep(100)
+      withClue(Files.readString(stderr.toPath)) { committed.exists() shouldBe true }
+      proc.destroy() // SIGTERM
+      proc.waitFor(60, java.util.concurrent.TimeUnit.SECONDS) shouldBe true
+    } finally if (proc.isAlive) proc.destroyForcibly().waitFor()
+    Files.readString(stderr.toPath) should not include "Shutdown in progress"
   }
 
   test("golden mismatch refuses to start the STREAMING path specifically") {

@@ -1,8 +1,11 @@
 package graft.runtime
 
-import scala.collection.immutable.TreeMap
+import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import scala.collection.immutable.TreeMap
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{AnalysisException, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -21,33 +24,88 @@ import graft.pipeline.Pipeline
   * (StreamProcessOperations.scala:117-132; the reference's discarded
   * type-check bug at :118-120 is not replicated — canonical values keep
   * their types).
+  *
+  * The pre-pass runs on the driver and starts no Spark job, like the
+  * reference's in-process fold over a handful of records. The document's
+  * types come from `schema_of_json`, the same inference the multiLine
+  * JSON reader runs, and `from_json` parses it over a one-row local
+  * frame. The chain then runs over a local frame, which the optimizer's
+  * `ConvertToLocalRelation` folds into a local relation: the golden
+  * records go through Spark's interpreted expression evaluation, not
+  * through the generated code of a production run.
   */
 object GoldenFile {
 
   /** Verify `pipeline` against the golden file. Right(n) = n records
     * matched; Left(msg) = first mismatch / shape error. */
-  def verify(spark: SparkSession, pipeline: Pipeline, path: String): Either[String, Int] = {
-    val doc = spark.read.option("multiLine", true).json(path)
-    val cols = doc.columns.toSet
-    if (!cols.contains("inputs") || !cols.contains("expected"))
-      Left(s"golden file $path needs top-level `inputs` and `expected` arrays")
-    else compare(pipeline, explodeRecords(doc, "inputs"), explodeRecords(doc, "expected"))
+  def verify(spark: SparkSession, pipeline: Pipeline, path: String): Either[String, Int] =
+    verifyText(spark, pipeline, path, read(path))
+
+  /** The golden file's text; a missing or unreadable file throws an
+    * `IOException`. */
+  def read(path: String): String = Files.readString(Paths.get(path))
+
+  /** [[verify]] over the `text` of the golden file at `path`. */
+  def verifyText(spark: SparkSession, pipeline: Pipeline, path: String,
+      text: String): Either[String, Int] =
+    records(spark, path, text).flatMap { case (inputs, expected) =>
+      compare(pipeline, inputs, expected)
+    }
+
+  /** The golden document's `inputs` and `expected` arrays as local
+    * `(key, value)` frames, one row per element in array order; a missing
+    * `key`/`value` field becomes a null string column. */
+  private[runtime] def records(spark: SparkSession, path: String,
+      text: String): Either[String, (DataFrame, DataFrame)] = {
+    val one = spark.createDataFrame(java.util.List.of(Row(text)),
+      StructType(Seq(StructField("text", StringType))))
+    val parsed =
+      try Some(one.select(from_json(col("text"), schema_of_json(lit(text))).as("doc")))
+      catch { case _: AnalysisException => None }
+    // A top-level array holds one document per element, as the multiLine
+    // reader reads it. Malformed JSON, or any other value, has no such
+    // fields, as with that reader's corrupt-record column.
+    val docs = parsed.flatMap(p => p.schema("doc").dataType match {
+      case _: StructType => Some(p.select("doc.*"))
+      case ArrayType(st: StructType, _) =>
+        Some(spark.createDataFrame(p.head().getSeq[Row](0).filter(_ != null).asJava, st))
+      case _ => None
+    })
+    docs.filter(d => Set("inputs", "expected").subsetOf(d.columns.toSet)) match {
+      case None => Left(s"golden file $path needs top-level `inputs` and `expected` arrays")
+      case Some(d) =>
+        val rows = d.collect().toSeq
+        Right((localRecords(d, rows, "inputs"), localRecords(d, rows, "expected")))
+    }
+  }
+
+  /** The elements of the array `field` of the documents `docs`
+    * (collected as `rows`), in order. The element type is the one
+    * `explode` gives, which also rejects a field that is not an array. An
+    * EMPTY array (the natural way to assert "all inputs drop") infers a
+    * non-struct element type and yields no records. */
+  private def localRecords(docs: DataFrame, rows: Seq[Row], field: String): DataFrame = {
+    val kv = Seq("key", "value")
+    val (schema, recordRows) = docs.select(explode(col(field)).as("rec")).schema("rec").dataType match {
+      case recType: StructType =>
+        def has(name: String) = recType.fieldNames.contains(name)
+        val elems = rows.flatMap(r => Option(r.getSeq[Row](r.fieldIndex(field))).getOrElse(Nil))
+        (StructType(kv.map(n => if (has(n)) recType(n) else StructField(n, StringType))),
+          elems.map(e => Row.fromSeq(kv.map(n => if (e == null || !has(n)) null else e.getAs[Any](n)))))
+      case _ => (StructType(kv.map(StructField(_, StringType))), Nil)
+    }
+    docs.sparkSession.createDataFrame(recordRows.asJava, schema)
   }
 
   /** Run `pipeline` over the `(key, value)` frame `inputs` and compare
     * its output, in input order, with the `(key, value)` frame
     * `expected`. Fields match by name, not position. Right(n) = n records
-    * matched; Left(msg) = the count or the first record differs. */
+    * matched; Left(msg) = the count or the first record differs. Both
+    * frames are collected and the chain runs over a local copy of
+    * `inputs`, so local frames start no Spark job. */
   def compare(pipeline: Pipeline, inputs: DataFrame, expected: DataFrame): Either[String, Int] = {
-    // A monotonic `__seq` rides through the chain as a passthrough
-    // column, so the collected output can be put back in input order.
-    def numbered(df: DataFrame) = df.withColumn("__seq", monotonically_increasing_id())
-    def canonicalInOrder(df: DataFrame): Seq[Map[String, Any]] = {
-      val rows = df.orderBy(col("__seq")).drop("__seq")
-      rows.collect().toSeq.map(canonicalRow(_, rows.schema))
-    }
-    val actual = canonicalInOrder(pipeline.compile(numbered(inputs), passthrough = Seq("__seq")))
-    val exp = canonicalInOrder(numbered(expected))
+    val actual = output(pipeline, inputs)
+    val exp = expected.collect().toSeq.map(canonicalRow(_, expected.schema))
 
     if (actual.size != exp.size)
       Left(s"expected ${exp.size} output records, got ${actual.size}: " +
@@ -58,23 +116,29 @@ object GoldenFile {
     }.toLeft(actual.size)
   }
 
-  /** One row per array element, in array order, as a (key, value)
-    * frame; a missing `key`/`value` field becomes a null column. An EMPTY
-    * array (the natural way to assert "all inputs drop") infers a
-    * non-struct element type — yield an empty frame instead of crashing. */
-  private def explodeRecords(doc: DataFrame, field: String): DataFrame = {
-    val exploded = doc.select(explode(col(field)).as("rec"))
-    exploded.schema("rec").dataType match {
-      case recType: StructType =>
-        def pick(name: String) =
-          if (recType.fieldNames.contains(name)) col(s"rec.$name").as(name)
-          else lit(null).cast(StringType).as(name)
-        exploded.select(pick("key"), pick("value"))
-      case _ =>
-        exploded.where(lit(false)).select(
-          lit(null).cast(StringType).as("key"),
-          lit(null).cast(StringType).as("value"))
-    }
+  /** `pipeline`'s output over a local copy of `inputs`, canonical and
+    * in input order. */
+  private[runtime] def output(pipeline: Pipeline, inputs: DataFrame): Seq[Map[String, Any]] =
+    inOrder(pipeline.compile(numbered(inputs), passthrough = Seq(SeqCol)))
+
+  /** The `__seq` index column that rides through the chain as a
+    * passthrough column, so the collected output can be put back in
+    * input order. */
+  private[runtime] val SeqCol = "__seq"
+
+  /** A local copy of `inputs` with its rows numbered in [[SeqCol]]. */
+  private[runtime] def numbered(inputs: DataFrame): DataFrame =
+    inputs.sparkSession.createDataFrame(
+      inputs.collect().toSeq.zipWithIndex.map { case (r, i) => Row.fromSeq(r.toSeq :+ i.toLong) }.asJava,
+      inputs.schema.add(SeqCol, LongType, nullable = false))
+
+  /** The canonical rows of `out` without [[SeqCol]], in [[SeqCol]] order. */
+  private[runtime] def inOrder(out: DataFrame): Seq[Map[String, Any]] = {
+    val seqAt = out.schema.fieldIndex(SeqCol)
+    def withoutSeq[T](s: Seq[T]) = s.patch(seqAt, Nil, 1)
+    val schema = StructType(withoutSeq(out.schema.fields.toSeq))
+    out.collect().toSeq.sortBy(_.getLong(seqAt))
+      .map(r => canonicalRow(Row.fromSeq(withoutSeq(r.toSeq)), schema))
   }
 
   /** Canonical structural value: structs -> name-sorted maps WITHOUT

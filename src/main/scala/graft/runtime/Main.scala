@@ -2,6 +2,9 @@ package graft.runtime
 
 import java.util.Properties
 
+import org.apache.hadoop.fs.FileSystem
+import org.apache.hadoop.util.ShutdownHookManager
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
@@ -207,7 +210,7 @@ object Main {
 
   /** Run with an existing session; returns a process exit code: 0 ok,
     * 1 golden mismatch, 2 usage or input error (bad flags, an unreadable
-    * script, properties or schema file, a bad serde declaration, an
+    * script, properties, schema or golden file, a bad serde declaration, an
     * unknown format). A failing Spark job throws. */
   def run(spark: SparkSession, argv: Array[String]): Int =
     parseArgs(argv) match {
@@ -221,10 +224,11 @@ object Main {
 
     // Every input is read and parsed here, before any Spark work, so a
     // bad one is a usage error rather than an exception mid-run.
-    val (props, pipeline, inSerde, outSerde) =
+    val (props, pipeline, inSerde, outSerde, golden) =
       try (loadProperties(args.props), GraftScript.parseFile(args.script.get),
         args.inputSerde.map(KeyValueMapping.fromString),
-        args.outputSerde.map(KeyValueMapping.fromString))
+        args.outputSerde.map(KeyValueMapping.fromString),
+        args.test.map(path => path -> GoldenFile.read(path)))
       catch {
         case e: java.io.IOException => return usage(s"cannot read ${e.getMessage}")
         case e @ (_: GraftScript.ScriptError | _: IllegalArgumentException |
@@ -235,8 +239,8 @@ object Main {
     }
 
     // Golden pre-pass gates startup (Plumber.scala:41-55 semantics).
-    args.test.foreach { goldenPath =>
-      GoldenFile.verify(spark, pipeline, goldenPath) match {
+    golden.foreach { case (path, text) =>
+      GoldenFile.verifyText(spark, pipeline, path, text) match {
         case Left(msg) =>
           System.err.println(s"[graft] golden verification FAILED:\n$msg")
           return 1
@@ -287,14 +291,26 @@ object Main {
         .trigger(if (args.once) Trigger.AvailableNow() else
           Trigger.ProcessingTime(0))
         .start()
-      val hook = sys.addShutdownHook { query.stop() } // SIGTERM drains
+      // SIGTERM drains: the hook stops the query before Spark's own
+      // shutdown hook stops the SparkContext under it.
+      val drained = new java.util.concurrent.CountDownLatch(1)
+      val drain: Runnable = () => try query.stop() finally drained.countDown()
+      ShutdownHookManager.get().addShutdownHook(drain, DrainHookPriority)
       try { query.awaitTermination(); 0 }
       finally
         // Once SIGTERM has started JVM shutdown the hook is already
-        // running and can no longer be removed.
-        try hook.remove() catch { case _: IllegalStateException => }
+        // running and can no longer be removed. The query ends before
+        // its stop() returns, so wait for the hook: the caller's
+        // spark.stop() must not stop the context under it.
+        try ShutdownHookManager.get().removeShutdownHook(drain)
+        catch { case _: IllegalStateException => drained.await() }
     }
   }
+
+  /** Hadoop's `ShutdownHookManager` runs hooks one at a time, highest
+    * priority first; Spark registers its own (which stops the
+    * SparkContext) at `FileSystem.SHUTDOWN_HOOK_PRIORITY + 30`. */
+  private val DrainHookPriority = FileSystem.SHUTDOWN_HOOK_PRIORITY + 31
 
   /** Spark's text sink takes exactly one string column: write `value`
     * (cast to string), mirroring a value-only Kafka producer. */

@@ -15,7 +15,7 @@ import graft.serde.{AvroMapping, ConfluentAvroMapping}
   * streaming paths. */
 class RuntimeSpec extends SparkSpecBase with Matchers {
 
-  private val ex = "/root/repo/examples"
+  private val ex = new java.io.File("examples").getAbsolutePath
   private def tmp(): String =
     Files.createTempDirectory("graft-rt").toString
 
@@ -72,7 +72,7 @@ class RuntimeSpec extends SparkSpecBase with Matchers {
     Main.run(spark, Array("-l", "p.graft")) shouldBe 2      // no -i/-o
     Main.run(spark, Array("--bogus")) shouldBe 2
     // input errors are usage errors too, not exceptions: a script that
-    // does not parse, bad -d/-s declarations, missing -l/-p/.avsc files
+    // does not parse, bad -d/-s declarations, missing -l/-t/-p/.avsc files
     val io = Array("-i", s"$ex/time/input", "-o", tmp() + "/out")
     val bad = Files.createTempFile("bad", ".graft")
     Files.writeString(bad, "explode value\n")
@@ -84,6 +84,7 @@ class RuntimeSpec extends SparkSpecBase with Matchers {
     Main.run(spark, time ++ Array("-t", s"$ex/time/golden.json", "-D",
       "-s", "bogus")) shouldBe 2
     Main.run(spark, io ++ Array("-l", "/nonexistent/p.graft")) shouldBe 2
+    Main.run(spark, time ++ Array("-t", "/nonexistent/g.json", "-D")) shouldBe 2
     Main.run(spark, io ++ time ++ Array("-p", "/nonexistent/g.properties")) shouldBe 2
     Main.run(spark, io ++ time ++ Array("-s", "avro=/nonexistent/s.avsc")) shouldBe 2
     val badAvsc = Files.createTempFile("bad", ".avsc")
@@ -285,9 +286,10 @@ class RuntimeSpec extends SparkSpecBase with Matchers {
 
   test("SIGTERM drains a running stream without a shutdown-hook error") {
     // A forked CLI JVM streams examples/time until its first committed
-    // micro-batch, then gets SIGTERM. The shutdown hook stops the query;
-    // Main must not then try to remove that hook, which the JVM refuses
-    // once shutdown is in progress.
+    // micro-batch, then gets SIGTERM. The shutdown hook stops the query
+    // before Spark's own hook or Main.main stops the SparkContext; Main
+    // must not then try to remove that hook, which is refused once
+    // shutdown is in progress.
     import scala.jdk.CollectionConverters._
     val dir = tmp()
     val jvmArgs = java.lang.management.ManagementFactory.getRuntimeMXBean
@@ -316,8 +318,8 @@ class RuntimeSpec extends SparkSpecBase with Matchers {
       proc.destroy() // SIGTERM
       proc.waitFor(60, java.util.concurrent.TimeUnit.SECONDS) shouldBe true
     } finally if (proc.isAlive) proc.destroyForcibly().waitFor()
-    Files.readString(stderr.toPath).linesIterator
-      .filter(_.contains("Shutdown in progress")).toSeq shouldBe empty
+    Files.readString(stderr.toPath).linesIterator.filter(l =>
+      l.contains("Shutdown in progress") || l.contains("on a stopped SparkContext")).toSeq shouldBe empty
   }
 
   test("golden mismatch refuses to start the STREAMING path specifically") {

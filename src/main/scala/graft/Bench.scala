@@ -2,8 +2,6 @@ package graft
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.SparkSession
-
 /** Driver-run benchmark: headline queries on SPARK_GRAFT_SF_DIR, one
   * JSON result line. Each query is forced through the `noop` sink so
   * every output column is actually computed (a bare `count()` would let
@@ -144,7 +142,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = Boards.cpus
     // Wall-clock budget: stop STARTING new queries once exceeded and
     // finalize with the passes completed, so the full final output is
     // emitted inside the caller's timeout instead of the caller's
@@ -156,13 +154,7 @@ object Bench {
       sys.env.getOrElse("SPARK_GRAFT_BENCH_WARM_PASSES", "2").toInt
     val startNanos = System.nanoTime()
     def elapsedSec: Double = (System.nanoTime() - startNanos) / 1e9
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Boards.session()
 
     // Pollution samples for the degraded stamp, one per completed query
     // (average foreign CPU over that query's window). Declared ahead of
@@ -192,15 +184,9 @@ object Bench {
       // Pollution sample for THIS query's window (average since the
       // previous boundary) — feeds the degraded stamp.
       foreignSamples += foreignCpu()
-      // UNTIMED cleanup: iterative ops (PageRank, cluster dedup, CDC
-      // merge) pin frames via cache/localCheckpoint, and those blocks
-      // outlive the query in this single shared JVM — 233 queries x 3
-      // passes of accumulation is storage the next query's bill
-      // shouldn't carry. Each query is billed from a clean block store,
-      // the honest model of a real cluster where a job's executors
-      // release on exit.
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
+      // UNTIMED cleanup: 233 queries x 3 passes of accumulated pins is
+      // storage the next query's bill shouldn't carry
+      Boards.unpersistAll(spark)
       dt
     }
     // ms precision: sub-millisecond digits are pure noise on a co-tenant

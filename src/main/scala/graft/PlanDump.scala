@@ -2,7 +2,6 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.ExplainMode
 
 /** Optimization-round measurement tool (guide §1.4/§7.2): write the
@@ -25,14 +24,7 @@ object PlanDump {
     val unknown = only.diff(SparkEntry.queries.keySet)
     require(unknown.isEmpty,
       s"unknown query name(s): ${unknown.mkString(", ")}")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Boards.session()
     Files.createDirectories(Paths.get(outDir))
     val names = SparkEntry.queries.keys.toSeq.sorted
       .filter(n => only.isEmpty || only(n))
@@ -44,8 +36,7 @@ object PlanDump {
           ExplainMode.fromString("formatted"))
         Files.writeString(out, txt)
         // Cleanup any frames the construction pinned (mirrors Bench.run)
-        spark.sparkContext.getPersistentRDDs.values
-          .foreach(_.unpersist(blocking = false))
+        Boards.unpersistAll(spark)
       } catch { case e: Throwable =>
         System.err.println(s"[plandump] $name failed: ${e.getMessage}")
         Files.writeString(out, s"PLAN DUMP FAILED: ${e.getMessage}\n")

@@ -3,7 +3,6 @@ package graft
 import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
 
 /** Optimization-round measurement tool (guide §1): run named queries
   * through the noop sink and report, per query, WHERE the wall time
@@ -21,14 +20,7 @@ object QueryProfile {
     val names = args.tail.toSeq
     val unknown = names.filterNot(SparkEntry.queries.contains)
     require(unknown.isEmpty, s"unknown: ${unknown.mkString(", ")}")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Boards.session()
 
     val jobs = new AtomicInteger(0)
     val stages = new AtomicInteger(0)
@@ -50,11 +42,6 @@ object QueryProfile {
     try spark.read.parquet(s"$sfDir/events.parquet").count()
     catch { case _: Throwable => () }
 
-    // JSON-safe interpolation: strip quote/backslash/control chars and
-    // guard a null getMessage — an unescaped newline or quote in an
-    // error (or a hostile query name) breaks the per-query JSON line
-    def jsonSafe(s: String): String =
-      String.valueOf(s).replaceAll("[\"\\\\\\n\\r\\t]", " ").take(120)
     for (n <- names) {
       jobs.set(0); stages.set(0); tasks.set(0); taskMs.set(0L)
       spark.sparkContext.setJobDescription(n)
@@ -65,15 +52,21 @@ object QueryProfile {
         val wallSec = (System.nanoTime() - t0) / 1e9
         // give straggler listener events a beat to drain
         Thread.sleep(200)
-        println(f"""{"query":"${jsonSafe(n)}","wall_sec":$wallSec%.3f,""" +
+        println(f"""{"query":${jsonSafe(n)},"wall_sec":$wallSec%.3f,""" +
           s""""jobs":${jobs.get},"stages":${stages.get},""" +
           s""""tasks":${tasks.get},"task_time_sec":${taskMs.get / 1000.0}}""")
-      } catch { case e: Throwable =>
-        println(s"""{"query":"${jsonSafe(n)}","error":"${jsonSafe(e.getMessage)}"}""")
-      }
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
+      } catch { case e: Throwable => println(errorLine(n, e.getMessage)) }
+      Boards.unpersistAll(spark)
     }
     spark.stop()
   }
+
+  /** A quoted JSON string of at most 120 characters of `s` (a null
+    * message reads "null"), cut before escaping so no escape is split. */
+  private def jsonSafe(s: String): String =
+    Boards.json(String.valueOf(s).take(120))
+
+  /** The JSON line reported for query `name` that failed with `msg`. */
+  private[graft] def errorLine(name: String, msg: String): String =
+    s"""{"query":${jsonSafe(name)},"error":${jsonSafe(msg)}}"""
 }

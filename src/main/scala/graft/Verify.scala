@@ -1,8 +1,9 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+  * plus oracle_sql.json, for the driver's DuckDB compare. Ends with one
+  * JSON summary line and exits 1 when any query failed. */
 object Verify {
   def main(args: Array[String]): Unit = {
     // args: <sfDir> <outDir> [queryName ...] — names (builder-side spot
@@ -15,39 +16,41 @@ object Verify {
     require(unknown.isEmpty,
       s"unknown query name(s): ${unknown.mkString(", ")} — a typo here " +
         "would dump nothing and let the oracle spot-check pass vacuously")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Boards.session()
+    val code = run(spark, sfDir, outDir,
+      SparkEntry.queries.filter { case (name, _) => only.isEmpty || only(name) })
+    spark.stop()
+    if (code != 0) sys.exit(code)
+  }
+
+  /** Dump every query in `queries` to `<outDir>/<name>` and write
+    * `oracle_sql.json`, then print the summary line
+    * `{"dumped":n,"failed":m,"failed_names":[…]}`. A failing query is
+    * reported on stderr and does not stop the others. Returns the exit
+    * code: 1 when any query failed, else 0. */
+  def run(spark: SparkSession, sfDir: String, outDir: String,
+      queries: Map[String, (SparkSession, String) => DataFrame]): Int = {
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries
-      .filter { case (name, _) => only.isEmpty || only(name) }
-      .foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
+    val failed = queries.toSeq.flatMap { case (name, fn) =>
+      try {
+        fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+          .parquet(s"$outDir/$name")
+        None
+      } catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        Some(name)
       }
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
+    // every control char escaped — a tab or CR in builder-authored SQL
+    // would otherwise make the driver's json.load fail and silently
+    // zero the round's correctness
     val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+      .map { case (k, v) => s"${Boards.json(k)}: ${Boards.json(v)}" }
+      .mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-    spark.stop()
+    println(s"""{"dumped":${queries.size - failed.size},""" +
+      s""""failed":${failed.size},""" +
+      s""""failed_names":${failed.map(Boards.json).mkString("[", ",", "]")}}""")
+    if (failed.isEmpty) 0 else 1
   }
 }

@@ -866,43 +866,29 @@ object Dedup {
     * geometrically, so convergence is O(log diameter) and the default
     * round cap is unreachable for any physical graph. Each round is
     * two shuffle-joins + one map-side-partial aggregate over slim (id,
-    * label) pairs. Per round the frame is checkpointed: without it the
-    * plan lineage doubles per iteration and planning time, not data,
-    * becomes the bottleneck. The driver holds only a one-row
-    * convergence count per round. Superseded per-round checkpoints are
-    * released EXPLICITLY the moment the next round's eager pin lands
-    * (r21; ContextCleaner would only reclaim them after a driver GC
-    * happens to collect the replaced handles) — storage occupancy is
-    * O(1) slim (id, label) frames at any round count.
-    *
-    * Durability: the default `localCheckpoint` stores blocks on
-    * EXECUTORS with truncated lineage — cheap, but on a real cluster
-    * one lost executor mid-propagation fails the job unrecoverably.
-    * Pass `checkpointDir` (an HDFS/object-store path at cluster scale)
-    * to use RELIABLE `checkpoint()` instead: each round's slim frame is
-    * written to fault-tolerant storage and survives executor loss,
-    * at the cost of one extra write+read of (id, label) pairs per
-    * round. Outputs are identical either way (DedupSpec pins it) —
-    * this is a durability knob, not a semantics knob.
+    * label) pairs. Per round the frame is pinned ([[Pins]], which also
+    * owns the `checkpointDir` durability knob — DedupSpec pins that
+    * outputs are identical either way): without it the plan lineage
+    * doubles per iteration and planning time, not data, becomes the
+    * bottleneck. The driver holds only a one-row convergence sum per
+    * round; `maxIters` bounds the label-changing rounds
+    * ([[Fixpoint]]).
     *
     * Input must carry `id_a`, `id_b` columns (as produced by
     * [[nearDupPairs]] / [[simhashNearDupPairs]] /
     * [[embeddingNearDupPairs]]); ids must be non-null. */
   def nearDupClusters(pairs: DataFrame, maxIters: Int = 50,
       checkpointDir: Option[String] = None): DataFrame = {
-    checkpointDir.foreach(pairs.sparkSession.sparkContext.setCheckpointDir)
-    def pin(df: DataFrame): DataFrame =
-      if (checkpointDir.isDefined) df.checkpoint()
-      else org.apache.spark.sql.GraftColumnBridge.localCheckpointBounded(df)
+    val pins = Pins(pairs.sparkSession, checkpointDir)
     // materialize the (possibly expensive) pair plan ONCE; the
     // symmetrizing union would otherwise execute it per branch
-    val p = pin(pairs.select(col("id_a"), col("id_b")))
-    val edges = pin(p.select(col("id_a").as("src"), col("id_b").as("dst"))
+    val p = pins(pairs.select(col("id_a"), col("id_b")))
+    val edges = pins(p.select(col("id_a").as("src"), col("id_b").as("dst"))
       .union(p.select(col("id_b").as("src"), col("id_a").as("dst")))
       .distinct()) // edges are re-joined every round: pin them
-    // p is fully folded into the edges pin — release its blocks (r21)
-    org.apache.spark.sql.GraftColumnBridge.releasePin(p)
-    var labels = pin(edges.select(col("src").as("id")).distinct()
+    // p is fully folded into the edges pin
+    pins.release(p)
+    val labels0 = pins(edges.select(col("src").as("id")).distinct()
       .withColumn("label", col("id")))
     // Convergence by LABEL-SUM fixpoint (optimization r20): labels
     // only ever decrease per id over a fixed id set, so
@@ -914,34 +900,26 @@ object Dedup {
     def labelSum(df: DataFrame): java.math.BigDecimal =
       df.agg(sum(col("label").cast(DecimalType(38, 0)))).head()
         .getDecimal(0)
-    var prevSum = labelSum(labels)
-    var round = 0
-    var converged = false
-    while (!converged && round < maxIters) {
-      val prop = edges.join(labels, edges("dst") === labels("id"))
-        .select(edges("src").as("id"), col("label"))
-      val folded = pin(labels.union(prop)
-        .groupBy(col("id")).agg(min(col("label")).as("label")))
-      // pinned: the jump self-joins this frame twice; without pinning,
-      // the union+aggregate would execute per side
-      // pointer jump: follow each label to ITS label (min only drops)
-      val parents = folded.select(col("id").as("pid"), col("label").as("plabel"))
-      val next = pin(folded.join(parents, folded("label") === parents("pid"), "left")
-        .select(folded("id"), least(folded("label"),
-          coalesce(col("plabel"), folded("label"))).as("label")))
-      val s = labelSum(next)
-      // null sums (empty pair set -> empty labels) converge immediately
-      converged = java.util.Objects.equals(s, prevSum)
-      prevSum = s
-      // next is eagerly pinned — the round's scratch fold and the
-      // superseded labels are dead; release them (r21 loop-storage
-      // discipline: the loop holds O(1) pinned frames, not O(rounds))
-      org.apache.spark.sql.GraftColumnBridge.releasePin(folded)
-      org.apache.spark.sql.GraftColumnBridge.releasePin(labels)
-      labels = next
-      round += 1
+    val ((labels, _), _) = Fixpoint.iterate("nearDupClusters",
+        (labels0, labelSum(labels0)), maxIters)(s => Seq(s._1)) {
+      case (labels, prevSum) =>
+        val prop = edges.join(labels, edges("dst") === labels("id"))
+          .select(edges("src").as("id"), col("label"))
+        val folded = pins(labels.union(prop)
+          .groupBy(col("id")).agg(min(col("label")).as("label")))
+        // pinned: the jump self-joins this frame twice; without pinning,
+        // the union+aggregate would execute per side
+        // pointer jump: follow each label to ITS label (min only drops)
+        val parents = folded.select(col("id").as("pid"), col("label").as("plabel"))
+        val next = pins(folded.join(parents, folded("label") === parents("pid"), "left")
+          .select(folded("id"), least(folded("label"),
+            coalesce(col("plabel"), folded("label"))).as("label")))
+        pins.release(folded)
+        val s = labelSum(next)
+        // null sums (empty pair set -> empty labels) converge immediately
+        if (java.util.Objects.equals(s, prevSum)) { pins.release(next); None }
+        else Some((next, s))
     }
-    require(converged, s"label propagation did not converge in $maxIters rounds")
     val sizes = labels.groupBy(col("label")).agg(count(lit(1)).as("cluster_size"))
     labels.join(sizes, "label")
       .select(col("id"), col("label").as("cluster_id"), col("cluster_size"))

@@ -21,22 +21,17 @@ import org.apache.spark.sql.types.{DecimalType, DoubleType, LongType}
   */
 object Graph {
 
-  /** Shared PageRank prelude: the pin function (checkpoint vs
-    * localCheckpoint — see [[pageRankFixed]] on why per-round pins are
-    * load-bearing), the edge frame, the per-source divisor frame, and
-    * the pinned divisor-joined edge frame every round re-joins. ONE
-    * implementation — the variants' preludes were identical
-    * triplicated code. Unweighted (`weightCol` None): distinct edges,
-    * divisor = out-degree. Weighted: duplicate (src, dst) edges SUM
+  /** Shared PageRank prelude: the [[Pins]], the edge frame, the
+    * per-source divisor frame, and the pinned divisor-joined edge frame
+    * every round re-joins. ONE implementation — the variants' preludes
+    * were identical triplicated code. Unweighted (`weightCol` None):
+    * distinct edges, divisor = out-degree. Weighted: duplicate (src, dst) edges SUM
     * their weights, divisor = the source's total out-weight (both
     * exposed under the same `outdeg` name so the round bodies share). */
   private def prSetup(edges: DataFrame, srcCol: String, dstCol: String,
       checkpointDir: Option[String], weightCol: Option[String] = None)
-      : (DataFrame => DataFrame, DataFrame, DataFrame, DataFrame) = {
-    checkpointDir.foreach(edges.sparkSession.sparkContext.setCheckpointDir)
-    def pin(df: DataFrame): DataFrame =
-      if (checkpointDir.isDefined) df.checkpoint()
-      else org.apache.spark.sql.GraftColumnBridge.localCheckpointBounded(df)
+      : (Pins, DataFrame, DataFrame, DataFrame) = {
+    val pins = Pins(edges.sparkSession, checkpointDir)
     val e = weightCol match {
       case None =>
         edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
@@ -60,8 +55,7 @@ object Graph {
       case None => e.groupBy(col("src")).agg(count(lit(1)).as("outdeg"))
       case Some(_) => e.groupBy(col("src")).agg(sum(col("w")).as("outdeg"))
     }
-    val ewd = pin(e.join(deg, Seq("src")))
-    (pin, e, deg, ewd)
+    (pins, e, deg, pins(e.join(deg, Seq("src"))))
   }
 
   /** Shared round driver for the NODE-UNIVERSE variants
@@ -97,11 +91,10 @@ object Graph {
     * (warm-vs-cold measurement runs, k+j round compositions —
     * q_pagerank_incr runs three) and pass it to the `*On` variants:
     * each chain then reuses the pinned frames instead of re-deriving
-    * distinct/degree/universe per call. Handles are pinned
-    * (localCheckpoint or `checkpointDir`), so a PrGraph is tied to
-    * the SparkSession that built it. */
+    * distinct/degree/universe per call. Handles are [[Pins]], so a
+    * PrGraph is tied to the SparkSession that built it. */
   final case class PrGraph private[ops] (
-      pin: DataFrame => DataFrame, ewd: DataFrame, nodes: DataFrame,
+      pins: Pins, ewd: DataFrame, nodes: DataFrame,
       n: Long, weighted: Boolean)
 
   /** Build a [[PrGraph]] — the shared prelude of [[pageRankDangling]]
@@ -112,7 +105,7 @@ object Graph {
   def prGraph(edges: DataFrame, srcCol: String, dstCol: String,
       checkpointDir: Option[String] = None,
       weightCol: Option[String] = None): PrGraph = {
-    val (pin, e, deg, ewd) =
+    val (pins, e, deg, ewd) =
       prSetup(edges, srcCol, dstCol, checkpointDir, weightCol)
     // Dangling membership is ROUND-INVARIANT (a function of the edge
     // set alone), so it is derived once — as a BOOLEAN FLAG riding the
@@ -123,13 +116,13 @@ object Graph {
     // driver-job-latency-bound at bench scale). Same motivation as
     // the r17 derive-once fix (deriving in-loop measured 1.4x on the
     // query total at sf0.1: 8.9s -> 6.2s warm at 4 threads).
-    val nodes = pin(e.select(col("src").as("node"))
+    val nodes = pins(e.select(col("src").as("node"))
       .unionByName(e.select(col("dst").as("node"))).distinct()
       .join(deg.select(col("src").as("node"), lit(true).as("__has_out")),
         Seq("node"), "left")
       .select(col("node"), col("__has_out").isNull.as("__dang")))
     val n = nodes.count() // the one driver scalar: a single long
-    PrGraph(pin, ewd, nodes, n, weightCol.isDefined)
+    PrGraph(pins, ewd, nodes, n, weightCol.isDefined)
   }
 
   private def prGraphRounds(g: PrGraph, iters: Int, unit: Long,
@@ -142,13 +135,14 @@ object Graph {
     // ([[pageRankWarmStart]]); nodes the prior doesn't know (the edge
     // delta's additions) start at the uniform unit, prior nodes absent
     // from the new universe drop with it (the left join's direction).
-    var scores = g.pin(init match {
+    val scores0 = g.pins(init match {
       case None => g.nodes.withColumn("score", lit(unit))
       case Some(pr) => g.nodes.join(pr, Seq("node"), "left")
         .select(col("node"), col("__dang"),
           coalesce(col("__prior_score"), lit(unit)).as("score"))
     })
-    for (_ <- 1 to iters) {
+    // the shared g.nodes/g.ewd pins stay with the PrGraph owner
+    Fixpoint.rounds(scores0, iters)(Seq(_)) { scores =>
       val contrib = g.ewd.join(scores, g.ewd("src") === scores("node"))
         .select(g.ewd("dst").as("cn"), expr(contribSql).as("c"))
         .groupBy(col("cn")).agg(sum(col("c")).as("s"))
@@ -156,17 +150,11 @@ object Graph {
       // a filter+sum on the frame in hand, not a per-round semi-join
       val dang = scores.where(col("__dang"))
         .agg(coalesce(sum(col("score")), lit(0L)).as("dt"))
-      val next = g.pin(scores.select(col("node"), col("__dang"))
+      g.pins(scores.select(col("node"), col("__dang"))
         .join(contrib, col("node") === col("cn"), "left")
         .crossJoin(broadcast(dang))
         .selectExpr("node", "__dang", scoreFormula(g.n)))
-      // next is eagerly materialized — round R−1's pinned blocks are
-      // dead; release them so the loop holds O(1) frames, not O(iters)
-      // (r21; the shared g.nodes/g.ewd pins stay for the PrGraph owner)
-      org.apache.spark.sql.GraftColumnBridge.releasePin(scores)
-      scores = next
-    }
-    scores.select(col("node"), col("score"))
+    }.select(col("node"), col("score"))
   }
 
   /** Fixed `iters` rounds of damped PageRank in integer fixed-point:
@@ -193,38 +181,26 @@ object Graph {
     * outdeg) edge frame against the (node, score) frame plus one
     * map-side-partial sum — the textbook distributed PR round. The
     * edge frame is degree-joined and pinned ONCE; every round's score
-    * frame is pinned too, and that per-round pin is LOAD-BEARING, not
-    * lineage hygiene: the score side is small, so Catalyst rightly
-    * BROADCASTS it into the next round's join, and a broadcast
-    * executes its subplan as its own job — with a lazy chain each
-    * round re-executes the entire un-pinned prefix (and those re-runs
-    * nest), which measured as an exponential job blowup at sf0.1, not
-    * the one-job tree a shuffle-only DAG would give. Same
-    * `checkpointDir`-for-durability knob as
-    * [[Dedup.nearDupClusters]]. */
+    * frame is pinned too (load-bearing, see [[Pins]], which also owns
+    * the `checkpointDir` durability knob). */
   def pageRankFixed(edges: DataFrame, srcCol: String, dstCol: String,
       iters: Int, dampNum: Long = 85L, dampDen: Long = 100L,
       unit: Long = 1000000L,
       checkpointDir: Option[String] = None): DataFrame = {
     require(iters >= 1, "iters must be >= 1")
-    val (pin, _, _, ewd) = prSetup(edges, srcCol, dstCol, checkpointDir)
+    val (pins, _, _, ewd) = prSetup(edges, srcCol, dstCol, checkpointDir)
     val base = unit - unit * dampNum / dampDen
-    var scores = pin(ewd.select(col("src").as("node")).distinct()
-      .withColumn("score", lit(unit)))
     // The lean inner-join round its precondition buys — see
     // [[prUniverseRounds]] for why this variant does not share the
     // universe driver.
-    for (_ <- 1 to iters) {
-      val next = pin(ewd.join(scores, ewd("src") === scores("node"))
+    Fixpoint.rounds(pins(ewd.select(col("src").as("node")).distinct()
+        .withColumn("score", lit(unit))), iters)(Seq(_)) { scores =>
+      pins(ewd.join(scores, ewd("src") === scores("node"))
         .select(ewd("dst"), expr("score div outdeg").as("c"))
         .groupBy(col("dst"))
         .agg(sum(col("c")).as("s"))
         .selectExpr("dst AS node", s"$base + ($dampNum * s) div $dampDen AS score"))
-      // release the superseded round pin (r21 loop-storage discipline)
-      org.apache.spark.sql.GraftColumnBridge.releasePin(scores)
-      scores = next
     }
-    scores
   }
 
   /** [[pageRankFixed]] for REAL directed graphs: lifts both of its
@@ -248,8 +224,7 @@ object Graph {
     * (one slim shuffle) and a 1-row dangling-total frame that CROSS-
     * JOIN-broadcasts into the score update — no driver collect; the
     * only driver scalar is the node COUNT, computed once. Per-round
-    * pins are load-bearing for the same broadcast-re-execution reason
-    * documented on [[pageRankFixed]]. */
+    * pins: [[Pins]]. */
   def pageRankDangling(edges: DataFrame, srcCol: String, dstCol: String,
       iters: Int, dampNum: Long = 85L, dampDen: Long = 100L,
       unit: Long = 1000000L,
@@ -403,54 +378,44 @@ object Graph {
     * (n < ~9.2e6 at the default unit; drop unit to 1e4 for ~1e11
     * nodes). Scale shape: per round two slim edge |><| score joins +
     * two map-side-partial sums + two 1-row max broadcasts; frames
-    * pinned per round (the PR family's load-bearing lineage cut).
+    * pinned per round ([[Pins]]).
     * Returns `(node, hub, authority)` over the edge-endpoint universe. */
   def hits(edges: DataFrame, srcCol: String, dstCol: String, iters: Int,
       unit: Long = 1000000L,
       checkpointDir: Option[String] = None): DataFrame = {
     require(iters >= 1, s"iters must be >= 1, got $iters")
     require(unit >= 1, s"unit must be >= 1, got $unit")
-    checkpointDir.foreach(edges.sparkSession.sparkContext.setCheckpointDir)
-    def pin(df: DataFrame): DataFrame =
-      if (checkpointDir.isDefined) df.checkpoint()
-      else org.apache.spark.sql.GraftColumnBridge.localCheckpointBounded(df)
-    val e = pin(edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
+    val pins = Pins(edges.sparkSession, checkpointDir)
+    val e = pins(edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
       .distinct())
-    val nodes = pin(e.select(col("src").as("node"))
+    val nodes = pins(e.select(col("src").as("node"))
       .unionByName(e.select(col("dst").as("node"))).distinct())
     def normalize(raw0: DataFrame, keyCol: String, valCol: String,
         outCol: String): DataFrame = {
       // raw feeds BOTH the max aggregate and the universe join — cached
       // in-query so the e |><| scores half-round join runs once, not
       // twice (Catalyst re-executes shared subtrees per reference);
-      // consumed fully by the eager pin below, so unpersist right after
+      // consumed fully by the eager pin below, so released right after
       val raw = raw0.cache()
       val mx = raw.agg(coalesce(max(col(valCol)), lit(0L)).as("m"))
-      val out = pin(nodes.join(raw, nodes("node") === raw(keyCol), "left")
+      val out = pins(nodes.join(raw, nodes("node") === raw(keyCol), "left")
         .crossJoin(broadcast(mx))
         .selectExpr("node",
           s"CASE WHEN m > 0 THEN (coalesce($valCol, 0L) * ${unit}L) div m " +
             s"ELSE 0L END AS $outCol"))
-      raw.unpersist(blocking = false)
+      pins.release(raw)
       out
     }
-    var hub = pin(nodes.withColumn("h", lit(unit)))
-    var auth = nodes.withColumn("a", lit(0L))
-    for (_ <- 1 to iters) {
-      val rawA = e.join(hub, e("src") === hub("node"))
-        .groupBy(e("dst").as("an")).agg(sum(col("h")).as("ra"))
-      val authNext = normalize(rawA, "an", "ra", "a")
-      val rawH = e.join(authNext, e("dst") === authNext("node"))
-        .groupBy(e("src").as("hn")).agg(sum(col("a")).as("rh"))
-      val hubNext = normalize(rawH, "hn", "rh", "h")
-      // both successors are pinned — the previous round's hub/auth
-      // blocks are dead; release (r21 loop-storage discipline). Round
-      // 1's auth was never pinned (plain withColumn) so releasePin is
-      // a no-op there by the LogicalRDD match.
-      org.apache.spark.sql.GraftColumnBridge.releasePin(hub)
-      org.apache.spark.sql.GraftColumnBridge.releasePin(auth)
-      auth = authNext
-      hub = hubNext
+    // (hub, auth); round 1's auth is a plain unpinned frame
+    val (hub, auth) = Fixpoint.rounds((pins(nodes.withColumn("h", lit(unit))),
+        nodes.withColumn("a", lit(0L))), iters)(s => Seq(s._1, s._2)) {
+      case (hub, _) =>
+        val rawA = e.join(hub, e("src") === hub("node"))
+          .groupBy(e("dst").as("an")).agg(sum(col("h")).as("ra"))
+        val authNext = normalize(rawA, "an", "ra", "a")
+        val rawH = e.join(authNext, e("dst") === authNext("node"))
+          .groupBy(e("src").as("hn")).agg(sum(col("a")).as("rh"))
+        (normalize(rawH, "hn", "rh", "h"), authNext)
     }
     hub.join(auth, "node")
       .select(col("node"), col("h").as("hub"), col("a").as("authority"))
@@ -473,8 +438,7 @@ object Graph {
     * family, per-round cost is one slim edges |><| labels shuffle-join
     * + one map-side-partial argmax (lexicographic struct min over
     * (-count, label) — no Window), frames pinned per round
-    * ([[pageRankFixed]]'s lineage discipline, same `checkpointDir`
-    * durability knob).
+    * ([[Pins]]).
     *
     * `seeds(seedId, seedLabel)`: at most one row per id (duplicate
     * seed labels for one id would duplicate its node row — enforced).
@@ -484,11 +448,8 @@ object Graph {
       seeds: DataFrame, seedId: String, seedLabel: String, iters: Int,
       checkpointDir: Option[String] = None): DataFrame = {
     require(iters >= 1, s"iters must be >= 1, got $iters")
-    checkpointDir.foreach(edges.sparkSession.sparkContext.setCheckpointDir)
-    def pin(df: DataFrame): DataFrame =
-      if (checkpointDir.isDefined) df.checkpoint()
-      else org.apache.spark.sql.GraftColumnBridge.localCheckpointBounded(df)
-    val e = pin(edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
+    val pins = Pins(edges.sparkSession, checkpointDir)
+    val e = pins(edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
       .distinct())
     val sd = seeds.select(col(seedId).as("id"),
       col(seedLabel).as("seed_label"))
@@ -504,11 +465,10 @@ object Graph {
     val nodes = e.select(col("src").as("id"))
       .union(e.select(col("dst").as("id")))
       .union(sd.select(col("id"))).distinct()
-    var lab = pin(nodes.join(sd, Seq("id"), "left")
+    val lab0 = pins(nodes.join(sd, Seq("id"), "left")
       .select(col("id"), col("seed_label"),
         col("seed_label").as("label")))
-    var round = 0
-    while (round < iters) {
+    Fixpoint.rounds(lab0, iters)(Seq(_)) { lab =>
       val cnt = e.join(
           lab.where(col("label").isNotNull)
             .select(col("id").as("src"), col("label")),
@@ -527,7 +487,7 @@ object Graph {
       // identical (same structs, same min, same seed-clamp coalesce).
       // The null casts borrow each leg's own label column so the types
       // match by construction.
-      val next = pin(lab
+      pins(lab
         .select(col("id"), col("seed_label"), col("label"),
           when(lit(false),
             struct(lit(0L).as("nc"), col("label").as("l"))).as("p"))
@@ -543,13 +503,28 @@ object Graph {
           when(col("seed_label").isNotNull, col("seed_label"))
             .otherwise(coalesce(col("p.l"), col("__old")))
             .as("label")))
-      // release the superseded round pin (r21 loop-storage discipline)
-      org.apache.spark.sql.GraftColumnBridge.releasePin(lab)
-      lab = next
-      round += 1
-    }
-    lab.select(col("id"), col("label"))
+    }.select(col("id"), col("label"))
   }
+
+  /** One canonical `a < b` edge per undirected edge of any form:
+    * duplicates, both orientations and self-loops cleaned away. */
+  private def canonicalEdges(edges: DataFrame, srcCol: String,
+      dstCol: String): DataFrame =
+    edges.select(
+        least(col(srcCol), col(dstCol)).as("a"),
+        greatest(col(srcCol), col(dstCol)).as("b"))
+      .where(col("a") =!= col("b")).distinct()
+
+  /** The canonical edges `e` without those touching a `removed` vertex
+    * (two left-anti joins keyed by the small removed frontier). */
+  private def peel(e: DataFrame, removed: DataFrame): DataFrame =
+    e.join(removed.select(col("v").as("a")), Seq("a"), "left_anti")
+      .join(removed.select(col("v").as("b")), Seq("b"), "left_anti")
+
+  /** `(v, deg)` over canonical `(a, b)` edges. */
+  private def degrees(e: DataFrame): DataFrame =
+    e.select(col("a").as("v")).unionAll(e.select(col("b").as("v")))
+      .groupBy(col("v")).agg(count(lit(1)).as("deg"))
 
   /** K-CORE (fixed k): the maximal subgraph in which EVERY node keeps
     * degree >= k — the standard graph-density gate (Seidman 1983):
@@ -571,11 +546,9 @@ object Graph {
     * so every round costs at most the first. Convergence = an empty
     * removed set (one count on the frontier, nothing edge-sized), and
     * the converged round skips the pruning join entirely. Per-round
-    * [[org.apache.spark.sql.Dataset!.localCheckpoint(eager:Boolean):org.apache.spark.sql.Dataset[T]* localCheckpoint]]
-    * (or reliable checkpoint via `checkpointDir`) truncates lineage —
-    * the pageRankFixed discipline; rounds are bounded in practice by
-    * the graph's degeneracy cascade depth, with a LOUD `maxIters`
-    * refusal rather than a silent wrong answer.
+    * pins and the LOUD `maxIters` refusal: [[Pins]], [[Fixpoint]];
+    * rounds are bounded in practice by the graph's degeneracy cascade
+    * depth.
     *
     * Input is an undirected edge list in any form — duplicates, both
     * orientations, and self-loops are cleaned to one canonical
@@ -588,17 +561,8 @@ object Graph {
       roundsOut: Option[scala.collection.mutable.Buffer[Int]] = None)
       : DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
-    checkpointDir.foreach(edges.sparkSession.sparkContext.setCheckpointDir)
-    def pin(df: DataFrame): DataFrame =
-      if (checkpointDir.isDefined) df.checkpoint()
-      else org.apache.spark.sql.GraftColumnBridge.localCheckpointBounded(df)
-    def degrees(e: DataFrame): DataFrame =
-      e.select(col("a").as("v")).unionAll(e.select(col("b").as("v")))
-        .groupBy(col("v")).agg(count(lit(1)).as("deg"))
-    var e = pin(edges.select(
-        least(col(srcCol), col(dstCol)).as("a"),
-        greatest(col(srcCol), col(dstCol)).as("b"))
-      .where(col("a") =!= col("b")).distinct())
+    val pins = Pins(edges.sparkSession, checkpointDir)
+    val e0 = pins(canonicalEdges(edges, srcCol, dstCol))
     // The degree frame rides across rounds (optimization r20): ONE
     // 1-row min aggregate over it is simultaneously the progress test
     // (min < k ⇒ something peels), the emptiness test (NULL ⇒ no
@@ -607,34 +571,20 @@ object Graph {
     // its own. Peel sets are byte-identical to the pin-per-frontier
     // loop; only the job count per round drops (measured 53 → ~33
     // driver jobs at sf0.1, wall bound by job latency not data).
-    var dg = pin(degrees(e))
-    var round = 0
-    var converged = false
-    while (!converged) {
-      val m = dg.agg(min(col("deg"))).head()
-      if (m.isNullAt(0) || m.getLong(0) >= k) converged = true
-      else {
-        if (round >= maxIters)
-          throw new IllegalStateException(s"kCore: no fixpoint after " +
-            s"$maxIters peel rounds — raise maxIters")
-        val removed = dg.where(col("deg") < k).select(col("v"))
-        val e2 = pin(e
-          .join(removed.select(col("v").as("a")), Seq("a"), "left_anti")
-          .join(removed.select(col("v").as("b")), Seq("b"), "left_anti"))
-        val dg2 = pin(degrees(e2))
-        // both successors materialized — release the superseded round's
-        // pins (r21 loop-storage discipline: O(1) frames, not O(rounds))
-        org.apache.spark.sql.GraftColumnBridge.releasePin(e)
-        org.apache.spark.sql.GraftColumnBridge.releasePin(dg)
-        e = e2
-        dg = dg2
-        round += 1
-      }
+    val ((_, dg), rounds) = Fixpoint.iterate("kCore",
+        (e0, pins(degrees(e0))), maxIters)(s => Seq(s._1, s._2)) {
+      case (e, dg) =>
+        val m = dg.agg(min(col("deg"))).head()
+        if (m.isNullAt(0) || m.getLong(0) >= k) None
+        else {
+          val e2 = pins(peel(e, dg.where(col("deg") < k).select(col("v"))))
+          Some((e2, pins(degrees(e2))))
+        }
     }
     // observed pruning-round count — lets callers (the oracle
     // generator) derive an unroll depth from THIS run instead of a
     // hand pin that rots at a new scale factor
-    roundsOut.foreach(_ += round)
+    roundsOut.foreach(_ += rounds)
     dg.select(col("v"), col("deg").as("core_deg"))
   }
 
@@ -662,7 +612,8 @@ object Graph {
     * (the kCore discipline); the per-phase min degree is a 1-row agg
     * on the node-sized degree frame. Credits accumulate node-sized
     * rows per phase and fold with ONE final max groupBy. Per-round
-    * pins truncate lineage; LOUD `maxIters` refusal across all phases.
+    * pins ([[Pins]]); LOUD `maxIters` refusal across all phases
+    * ([[Fixpoint]]).
     *
     * Same input contract as [[kCore]] (any undirected edge soup;
     * cleaned to canonical a<b edges); isolated vertices never enter
@@ -672,17 +623,8 @@ object Graph {
       maxIters: Int = 1000, checkpointDir: Option[String] = None,
       phaseRoundsOut: Option[scala.collection.mutable.Buffer[Int]] = None)
       : DataFrame = {
-    checkpointDir.foreach(edges.sparkSession.sparkContext.setCheckpointDir)
-    def pin(df: DataFrame): DataFrame =
-      if (checkpointDir.isDefined) df.checkpoint()
-      else org.apache.spark.sql.GraftColumnBridge.localCheckpointBounded(df)
-    def degrees(e: DataFrame): DataFrame =
-      e.select(col("a").as("v")).unionAll(e.select(col("b").as("v")))
-        .groupBy(col("v")).agg(count(lit(1)).as("deg"))
-    var e = pin(edges.select(
-        least(col(srcCol), col(dstCol)).as("a"),
-        greatest(col(srcCol), col(dstCol)).as("b"))
-      .where(col("a") =!= col("b")).distinct())
+    val pins = Pins(edges.sparkSession, checkpointDir)
+    val e0 = pins(canonicalEdges(edges, srcCol, dstCol))
     // Unified phase/cascade loop (optimization r20): the degree frame
     // rides across rounds AND phases, and ONE 1-row min aggregate per
     // round is simultaneously the phase detector (min > d ⇒ the
@@ -695,58 +637,40 @@ object Graph {
     // oracle's unroll budgets) is byte-identical to the two-loop form;
     // only the driver job count drops (261 → ~150 at sf0.1, where the
     // loop is bound by job latency, not data).
-    var dg = pin(degrees(e))
-    var acc: Option[DataFrame] = None
-    var rounds = 0
-    var d = Long.MinValue
-    var phaseRemovals = 0
-    var anyPhase = false
-    var done = false
-    while (!done) {
-      val m = dg.agg(min(col("deg"))).head()
-      if (m.isNullAt(0)) done = true
+    //
+    // State: edges, degrees, the credit accumulator (None before the
+    // first phase), the current phase's d, and the removal-round count
+    // of every phase so far, newest first.
+    final case class Cascade(e: DataFrame, dg: DataFrame,
+        acc: Option[DataFrame], d: Long, phases: List[Int])
+    val (end, _) = Fixpoint.iterate("coreness",
+        Cascade(e0, pins(degrees(e0)), None, Long.MinValue, Nil), maxIters)(
+        s => Seq(s.e, s.dg) ++ s.acc) { s =>
+      val m = s.dg.agg(min(col("deg"))).head()
+      if (m.isNullAt(0)) None
       else {
         val dmin = m.getLong(0)
-        if (dmin > d) {
-          // phase jump: the previous phase's cascade just stabilized
-          // (or this is the first phase) — record it, credit survivors
-          if (anyPhase) phaseRoundsOut.foreach(_ += phaseRemovals)
-          phaseRemovals = 0
-          d = dmin
-          anyPhase = true
-          // every vertex still standing is in the d-core: credit d now;
-          // whoever survives the coming cascade gets a higher credit
-          val credit = dg.select(col("v"), lit(d).as("coreness"))
-          val accNext = acc.map(o => pin(o.unionAll(credit)))
-            .getOrElse(pin(credit))
-          // the old accumulator is folded into the new pin — release it
-          acc.foreach(org.apache.spark.sql.GraftColumnBridge.releasePin)
-          acc = Some(accNext)
-        }
-        if (rounds >= maxIters)
-          throw new IllegalStateException(s"coreness: no fixpoint after " +
-            s"$maxIters total peel rounds — raise maxIters")
+        // phase jump: the previous phase's cascade just stabilized (or
+        // this is the first phase). Every vertex still standing is in
+        // the dmin-core: credit dmin now; whoever survives the coming
+        // cascade gets a higher credit.
+        val (d, acc, phases) =
+          if (dmin > s.d) {
+            val credit = s.dg.select(col("v"), lit(dmin).as("coreness"))
+            (dmin, Some(pins(s.acc.fold(credit)(_.unionAll(credit)))),
+              0 :: s.phases)
+          } else (s.d, s.acc, s.phases)
         // nonempty by construction: the argmin vertex has deg <= d
-        val removed = dg.where(col("deg") <= d).select(col("v"))
-        val e2 = pin(e
-          .join(removed.select(col("v").as("a")), Seq("a"), "left_anti")
-          .join(removed.select(col("v").as("b")), Seq("b"), "left_anti"))
-        val dg2 = pin(degrees(e2))
-        // release the superseded round's pins (r21 loop-storage
-        // discipline); the credit accumulator handles its own handoff
-        org.apache.spark.sql.GraftColumnBridge.releasePin(e)
-        org.apache.spark.sql.GraftColumnBridge.releasePin(dg)
-        e = e2
-        dg = dg2
-        phaseRemovals += 1
-        rounds += 1
+        val e2 = pins(peel(s.e, s.dg.where(col("deg") <= d).select(col("v"))))
+        Some(Cascade(e2, pins(degrees(e2)), acc, d,
+          (phases.head + 1) :: phases.tail))
       }
     }
-    // observed removal rounds for the final phase — the oracle
-    // generator derives its per-phase unroll budgets from these
-    if (anyPhase) phaseRoundsOut.foreach(_ += phaseRemovals)
-    acc.map(_.groupBy(col("v")).agg(max(col("coreness")).as("coreness")))
-      .getOrElse(dg.select(col("v"), col("deg").as("coreness"))
+    // observed removal rounds per phase — the oracle generator derives
+    // its per-phase unroll budgets from these
+    phaseRoundsOut.foreach(_ ++= end.phases.reverse)
+    end.acc.map(_.groupBy(col("v")).agg(max(col("coreness")).as("coreness")))
+      .getOrElse(end.dg.select(col("v"), col("deg").as("coreness"))
         .limit(0))
   }
 
@@ -814,64 +738,52 @@ object Graph {
     * K4 cascade; the oracle recomputes the unrolled rounds
     * independently). Convergence = one 1-row min(support) aggregate
     * (min >= k-2 ⟺ nothing peels — the kCore discipline). Per-round
-    * pins truncate lineage and superseded pins are released; LOUD
-    * `maxIters` refusal. Returns `(a, b, support)` — the surviving
+    * pins ([[Pins]]); LOUD `maxIters` refusal ([[Fixpoint]]). Returns
+    * `(a, b, support)` — the surviving
     * canonical edges with their FIXPOINT support (all >= k-2). */
   def kTruss(edges: DataFrame, srcCol: String, dstCol: String, k: Int,
       maxIters: Int = 100, checkpointDir: Option[String] = None,
       roundsOut: Option[scala.collection.mutable.Buffer[Int]] = None)
       : DataFrame = {
     require(k >= 3, s"k must be >= 3 (k-2 triangles per edge), got $k")
-    checkpointDir.foreach(edges.sparkSession.sparkContext.setCheckpointDir)
-    def pin(df: DataFrame): DataFrame =
-      if (checkpointDir.isDefined) df.checkpoint()
-      else org.apache.spark.sql.GraftColumnBridge.localCheckpointBounded(df)
+    val pins = Pins(edges.sparkSession, checkpointDir)
     val km2 = (k - 2).toLong
-    val e0 = pin(edges.select(
-        least(col(srcCol), col(dstCol)).as("a"),
-        greatest(col(srcCol), col(dstCol)).as("b"))
-      .where(col("a") =!= col("b")).distinct())
-    // Initial support: the ONE full triangle enumeration of the run
-    // (r21 — the peel rounds below maintain it by decrement).
-    // deg is cached (not pinned): consumed by both ek degree joins
-    // inside orientedTriangles; released once cur is pinned.
-    val deg = e0.select(col("a").as("v")).unionAll(e0.select(col("b").as("v")))
-      .groupBy(col("v")).agg(count(lit(1)).as("deg")).cache()
-    val (tri, fHandle) = orientedTriangles(e0, deg,
-      shuffleHashClose = false)
-    // each triangle feeds support to its three canonical edges
-    val sup0 = tri.select(explode(array(
-        struct(least(col("u"), col("v1")).as("a"),
-          greatest(col("u"), col("v1")).as("b")),
-        struct(least(col("u"), col("v2")).as("a"),
-          greatest(col("u"), col("v2")).as("b")),
-        struct(least(col("v1"), col("v2")).as("a"),
-          greatest(col("v1"), col("v2")).as("b")))).as("t"))
-      .select(col("t.a").as("a"), col("t.b").as("b"))
-      .groupBy(col("a"), col("b")).agg(count(lit(1)).as("support"))
     // cur = every surviving edge with its CURRENT support (0 included:
-    // triangle-free edges must exist in the frame to be peeled)
-    var cur = pin(e0.join(sup0, Seq("a", "b"), "left")
-      .select(col("a"), col("b"),
-        coalesce(col("support"), lit(0L)).as("support")))
-    fHandle.unpersist(blocking = false)
-    deg.unpersist(blocking = false)
-    org.apache.spark.sql.GraftColumnBridge.releasePin(e0)
-    var round = 0
-    var converged = false
-    while (!converged) {
-      if (round >= maxIters)
-        throw new IllegalStateException(s"kTruss: no fixpoint after " +
-          s"$maxIters peel rounds — raise maxIters")
+    // triangle-free edges must exist in the frame to be peeled), from
+    // a fresh degree-oriented enumeration of the edge set `e`. deg is
+    // cached (not pinned): consumed by both ek degree joins inside
+    // orientedTriangles; released with f once cur is pinned.
+    def supported(e: DataFrame): DataFrame = {
+      val deg = degrees(e).cache()
+      val (tri, f) = orientedTriangles(e, deg, shuffleHashClose = false)
+      // each triangle feeds support to its three canonical edges
+      val sup = tri.select(explode(array(
+          struct(least(col("u"), col("v1")).as("a"),
+            greatest(col("u"), col("v1")).as("b")),
+          struct(least(col("u"), col("v2")).as("a"),
+            greatest(col("u"), col("v2")).as("b")),
+          struct(least(col("v1"), col("v2")).as("a"),
+            greatest(col("v1"), col("v2")).as("b")))).as("t"))
+        .select(col("t.a").as("a"), col("t.b").as("b"))
+        .groupBy(col("a"), col("b")).agg(count(lit(1)).as("support"))
+      val cur = pins(e.join(sup, Seq("a", "b"), "left")
+        .select(col("a"), col("b"),
+          coalesce(col("support"), lit(0L)).as("support")))
+      pins.release(f, deg, e)
+      cur
+    }
+    // Initial support: the ONE full triangle enumeration of the run
+    // (the peel rounds below maintain it by decrement).
+    val (cur, peels) = Fixpoint.iterate("kTruss",
+        supported(pins(canonicalEdges(edges, srcCol, dstCol))), maxIters)(
+        Seq(_)) { cur =>
       // ONE 1-row aggregate is progress + termination test (the kCore
       // discipline): min >= k-2 (or no edges) ⟺ nothing peels. The
       // same row carries |edges| and |peeling| for the hybrid choice.
       val mn = cur.agg(min(col("support")), count(lit(1)),
         sum(when(col("support") < km2, 1L).otherwise(0L))).head()
-      if (mn.isNullAt(0) || mn.getLong(0) >= km2) {
-        converged = true
-        round += 1 // the confirming no-change round, as before
-      } else if (mn.getLong(2) * 8L > mn.getLong(1)) {
+      if (mn.isNullAt(0) || mn.getLong(0) >= km2) None
+      else if (mn.getLong(2) * 8L > mn.getLong(1)) {
         // MASS PEEL (> 1/8 of the edges leave this round — the typical
         // opening round): enumerating the triangles that TOUCH the
         // removed set would cost more than a fresh degree-oriented
@@ -880,31 +792,8 @@ object Graph {
         // maintained frame stays exact by construction. The threshold
         // is a constant fraction (scale-free, not tuned to this rig);
         // either branch computes the identical support table.
-        val sv = pin(cur.where(col("support") >= km2)
-          .select(col("a"), col("b")))
-        val dg = sv.select(col("a").as("v"))
-          .unionAll(sv.select(col("b").as("v")))
-          .groupBy(col("v")).agg(count(lit(1)).as("deg")).cache()
-        val (tri2, fh2) = orientedTriangles(sv, dg,
-          shuffleHashClose = false)
-        val sup2 = tri2.select(explode(array(
-            struct(least(col("u"), col("v1")).as("a"),
-              greatest(col("u"), col("v1")).as("b")),
-            struct(least(col("u"), col("v2")).as("a"),
-              greatest(col("u"), col("v2")).as("b")),
-            struct(least(col("v1"), col("v2")).as("a"),
-              greatest(col("v1"), col("v2")).as("b")))).as("t"))
-          .select(col("t.a").as("a"), col("t.b").as("b"))
-          .groupBy(col("a"), col("b")).agg(count(lit(1)).as("support"))
-        val next = pin(sv.join(sup2, Seq("a", "b"), "left")
-          .select(col("a"), col("b"),
-            coalesce(col("support"), lit(0L)).as("support")))
-        fh2.unpersist(blocking = false)
-        dg.unpersist(blocking = false)
-        org.apache.spark.sql.GraftColumnBridge.releasePin(sv)
-        org.apache.spark.sql.GraftColumnBridge.releasePin(cur)
-        cur = next
-        round += 1
+        Some(supported(pins(cur.where(col("support") >= km2)
+          .select(col("a"), col("b")))))
       } else {
         val removed = cur.where(col("support") < km2)
           .select(col("a"), col("b"))
@@ -936,20 +825,16 @@ object Graph {
           .select(col("d.a").as("a"), col("d.b").as("b"))
           .join(removed, Seq("a", "b"), "left_anti")
           .groupBy(col("a"), col("b")).agg(count(lit(1)).as("__dec"))
-        val next = pin(cur.where(col("support") >= km2)
+        Some(pins(cur.where(col("support") >= km2)
           .join(dec, Seq("a", "b"), "left")
           .select(col("a"), col("b"),
             (col("support") - coalesce(col("__dec"), lit(0L)))
-              .as("support")))
-        // release the superseded round pin (r21 loop-storage discipline)
-        org.apache.spark.sql.GraftColumnBridge.releasePin(cur)
-        cur = next
-        round += 1
+              .as("support"))))
       }
     }
     // observed iteration count (incl. the confirming no-change round)
     // — the oracle generator derives its unroll depth from THIS run
-    roundsOut.foreach(_ += round)
+    roundsOut.foreach(_ += peels + 1)
     // at the fixpoint the maintained support IS the from-scratch
     // support of the surviving edge set (the decrement identity above)
     cur
@@ -1045,13 +930,8 @@ object Graph {
     // join. Both are re-executed per reference when left lazy (the
     // edge derivation can be an expensive upstream join) — pin them
     // in-query (same rationale as the f pin in orientedTriangles).
-    val e = edges.select(
-        least(col(srcCol), col(dstCol)).as("a"),
-        greatest(col(srcCol), col(dstCol)).as("b"))
-      .where(col("a") =!= col("b")).distinct().cache()
-    val deg = e.select(col("a").as("v"))
-      .unionAll(e.select(col("b").as("v")))
-      .groupBy(col("v")).agg(count(lit(1)).as("deg")).cache()
+    val e = canonicalEdges(edges, srcCol, dstCol).cache()
+    val deg = degrees(e).cache()
     val (tri, _) = orientedTriangles(e, deg)
     val tc = tri
       .select(explode(array(col("u"), col("v1"), col("v2"))).as("v"))
@@ -1095,13 +975,8 @@ object Graph {
     // non-edge anti-join), deg 3 times, n twice (wedge self-join) —
     // pinned in-query or Catalyst re-executes the whole edge
     // derivation per reference (orientedTriangles' f rationale).
-    val e = edges.select(
-        least(col(srcCol), col(dstCol)).as("a"),
-        greatest(col(srcCol), col(dstCol)).as("b"))
-      .where(col("a") =!= col("b")).distinct().cache()
-    val deg = e.select(col("a").as("v"))
-      .unionAll(e.select(col("b").as("v")))
-      .groupBy(col("v")).agg(count(lit(1)).as("deg")).cache()
+    val e = canonicalEdges(edges, srcCol, dstCol).cache()
+    val deg = degrees(e).cache()
     // Both directions, with the THROUGH vertex's degree attached and
     // hubs above the cap removed from the through role only (they keep
     // their endpoint role: deg_a/deg_b still count them).
@@ -1144,7 +1019,8 @@ object Graph {
     * map-side partials — the frontier math a giant graph wants; rounds
     * are bounded by the weighted graph's hop diameter; convergence =
     * zero improved vertices (a slim count, nothing edge-sized);
-    * per-round pins truncate lineage; LOUD `maxIters` refusal.
+    * per-round pins ([[Pins]]); LOUD `maxIters` refusal
+    * ([[Fixpoint]]).
     * Returns `(v, dist)` for reachable vertices only. */
   def multiSourceShortestPaths(edges: DataFrame, srcCol: String,
       dstCol: String, weightCol: String, seeds: Seq[Long],
@@ -1152,10 +1028,8 @@ object Graph {
       roundsOut: Option[scala.collection.mutable.Buffer[Int]] = None)
       : DataFrame = {
     require(seeds.nonEmpty, "seeds must be non-empty")
-    checkpointDir.foreach(edges.sparkSession.sparkContext.setCheckpointDir)
-    def pin(df: DataFrame): DataFrame =
-      if (checkpointDir.isDefined) df.checkpoint()
-      else org.apache.spark.sql.GraftColumnBridge.localCheckpointBounded(df)
+    val spark = edges.sparkSession
+    val pins = Pins(spark, checkpointDir)
     val e = edges.select(
         least(col(srcCol), col(dstCol)).as("a"),
         greatest(col(srcCol), col(dstCol)).as("b"),
@@ -1167,26 +1041,20 @@ object Graph {
           raise_error(lit("multiSourceShortestPaths: edge weights must " +
             "be positive integers — a non-positive cost breaks the " +
             "relaxation bound"))).otherwise(col("wt")).as("wt"))
-    val n = pin(e.select(col("a").as("u"), col("b").as("v"), col("wt"))
+    val n = pins(e.select(col("a").as("u"), col("b").as("v"), col("wt"))
       .unionAll(e.select(col("b").as("u"), col("a").as("v"), col("wt"))))
-    val spark = edges.sparkSession
-    var dist = pin(spark.createDataFrame(
+    val dist0 = pins(spark.createDataFrame(
       spark.sparkContext.parallelize(seeds.distinct.map(org.apache.spark.sql.Row(_, 0L))),
       org.apache.spark.sql.types.StructType(Seq(
         org.apache.spark.sql.types.StructField("v", LongType, nullable = false),
         org.apache.spark.sql.types.StructField("dist", LongType, nullable = false)))))
-    var round = 0
-    var converged = false
     // initial signature: the seed frame has |seeds| rows, all dist 0
-    var prevSig: (Long, java.math.BigDecimal) =
-      (seeds.distinct.size.toLong, java.math.BigDecimal.ZERO)
-    while (!converged) {
-      if (round >= maxIters)
-        throw new IllegalStateException("multiSourceShortestPaths: no " +
-          s"fixpoint after $maxIters relaxation rounds — raise maxIters")
+    val sig0 = (seeds.distinct.size.toLong, java.math.BigDecimal.ZERO)
+    val ((dist, _), rounds) = Fixpoint.iterate("multiSourceShortestPaths",
+        (dist0, sig0), maxIters)(s => Seq(s._1)) { case (dist, prevSig) =>
       val relaxed = n.join(dist.select(col("v").as("u"), col("dist")), "u")
         .select(col("v"), (col("dist") + col("wt")).as("dist"))
-      val next = pin(dist.unionAll(relaxed)
+      val next = pins(dist.unionAll(relaxed)
         .groupBy(col("v")).agg(min(col("dist")).as("dist")))
       // Fixpoint by (reached-count, exact dist-sum): per node the
       // distance only DECREASES and the reached set only GROWS, so
@@ -1198,20 +1066,14 @@ object Graph {
         sum(col("dist").cast(DecimalType(38, 0)))).head()
       val sig = (fp.getLong(0), fp.getDecimal(1))
       if (sig._1 == prevSig._1 && sig._2.compareTo(prevSig._2) == 0) {
-        converged = true
         // the confirming round's pin duplicates dist — release it
-        org.apache.spark.sql.GraftColumnBridge.releasePin(next)
-      } else {
-        prevSig = sig
-        // release the superseded round pin (r21 loop-storage discipline)
-        org.apache.spark.sql.GraftColumnBridge.releasePin(dist)
-        dist = next
-        round += 1
-      }
+        pins.release(next)
+        None
+      } else Some((next, sig))
     }
     // observed improving-round count — the oracle generator derives
     // its relaxation unroll depth from THIS run
-    roundsOut.foreach(_ += round)
+    roundsOut.foreach(_ += rounds)
     dist
   }
 
@@ -1238,10 +1100,7 @@ object Graph {
     * combine. No per-community state beyond two longs. */
   def modularity(edges: DataFrame, srcCol: String, dstCol: String,
       communities: DataFrame, vCol: String, commCol: String): DataFrame = {
-    val e0 = edges.select(
-        least(col(srcCol), col(dstCol)).as("a"),
-        greatest(col(srcCol), col(dstCol)).as("b"))
-      .where(col("a") =!= col("b")).distinct()
+    val e0 = canonicalEdges(edges, srcCol, dstCol)
     val cm = communities.select(col(vCol).as("v"), col(commCol).as("comm"))
       .distinct()
     val e = e0

@@ -111,12 +111,6 @@ object TextAnalysis {
     }
   }
 
-  /** Per-language marker-hit counts as a map<string,int>. */
-  def langScores(text: Column): Column =
-    map(langScoreExprs(text).flatMap { case (lang, score) =>
-      Seq(lit(lang), score)
-    }: _*)
-
   /** Heuristic language ID: argmax over marker-hit counts, ties broken by
     * language code ascending; docs with zero hits anywhere -> "und"
     * (unknown), mirroring BCP-47. */

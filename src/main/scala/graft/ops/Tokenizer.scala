@@ -110,20 +110,23 @@ object Tokenizer {
   /** Train `rounds` BPE merges on `corpus(textCol)`; returns the merge
     * table `(round, l, r, merged, pc)` — `pc` the winning pair's
     * corpus frequency (with multiplicity, weighted by word count).
-    * Rounds after symbol exhaustion (every word fused to one symbol)
-    * emit nothing — the table just ends early. */
+    * Training stops at symbol exhaustion (every word fused to one
+    * symbol), so the table may end early. Each round's word table is
+    * pinned ([[Pins]]). */
   def bpeMerges(corpus: DataFrame, textCol: String, rounds: Int,
       checkpointDir: Option[String] = None): DataFrame = {
     require(rounds >= 1 && rounds <= 256,
       s"bpeMerges: rounds must be in [1, 256], got $rounds")
-    checkpointDir.foreach(corpus.sparkSession.sparkContext.setCheckpointDir)
-    def pin(df: DataFrame): DataFrame =
-      if (checkpointDir.isDefined) df.checkpoint()
-      else org.apache.spark.sql.GraftColumnBridge.localCheckpointBounded(df)
-    var words = pin(wordSyms(corpus, textCol, keep = Nil))
-    val out = Seq.newBuilder[(Int, String, String, String, Long)]
-    for (r <- 1 to rounds) {
-      val top = words
+    val pins = Pins(corpus.sparkSession, checkpointDir)
+    // (words, merge table so far); every state-changing round adds one
+    // merge, so the `rounds` bound is reached by returning None, never
+    // by a refusal
+    val ((_, merges), _) = Fixpoint.iterate("bpeMerges",
+        (pins(wordSyms(corpus, textCol, keep = Nil)),
+          Vector.empty[(Int, String, String, String, Long)]), rounds)(
+        s => Seq(s._1)) { case (words, merges) =>
+      if (merges.size == rounds) None
+      else words
         .select(col("cnt"), col("syms"),
           explode(when(size(col("syms")) < 2, array().cast("array<int>"))
             .otherwise(sequence(lit(1), size(col("syms")) - 1))).as("i"))
@@ -131,18 +134,15 @@ object Tokenizer {
           element_at(col("syms"), col("i") + 1).as("r"))
         .agg(sum(col("cnt")).as("pc"))
         .orderBy(desc("pc"), asc("l"), asc("r"))
-        .limit(1).collect()
-      if (top.nonEmpty) {
-        val (l, rr, pc) =
-          (top(0).getString(0), top(0).getString(1), top(0).getLong(2))
-        out += ((r, l, rr, l + rr, pc))
-        val next = pin(applyMerge(words, l, rr))
-        // release the superseded round pin (r21 loop-storage discipline)
-        org.apache.spark.sql.GraftColumnBridge.releasePin(words)
-        words = next
-      } // else: no adjacent pairs remain; later rounds are no-ops too
+        .limit(1).collect().headOption
+        // None: no adjacent pairs remain, every later round is a no-op
+        .map { top =>
+          val (l, r, pc) = (top.getString(0), top.getString(1), top.getLong(2))
+          (pins(applyMerge(words, l, r)),
+            merges :+ ((merges.size + 1, l, r, l + r, pc)))
+        }
     }
-    corpus.sparkSession.createDataFrame(out.result())
+    corpus.sparkSession.createDataFrame(merges)
       .toDF("round", "l", "r", "merged", "pc")
   }
 

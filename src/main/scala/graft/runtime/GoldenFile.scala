@@ -71,7 +71,11 @@ object GoldenFile {
         Some(spark.createDataFrame(p.head().getSeq[Row](0).filter(_ != null).asJava, st))
       case _ => None
     })
-    docs.filter(d => Set("inputs", "expected").subsetOf(d.columns.toSet)) match {
+    // Both fields must be arrays: `null`, an object or a number has no
+    // records to read.
+    def isArray(d: DataFrame, field: String) =
+      d.columns.contains(field) && d.schema(field).dataType.isInstanceOf[ArrayType]
+    docs.filter(d => isArray(d, "inputs") && isArray(d, "expected")) match {
       case None => Left(s"golden file $path needs top-level `inputs` and `expected` arrays")
       case Some(d) =>
         val rows = d.collect().toSeq
@@ -81,9 +85,9 @@ object GoldenFile {
 
   /** The elements of the array `field` of the documents `docs`
     * (collected as `rows`), in order. The element type is the one
-    * `explode` gives, which also rejects a field that is not an array. An
-    * EMPTY array (the natural way to assert "all inputs drop") infers a
-    * non-struct element type and yields no records. */
+    * `explode` gives. An EMPTY array (the natural way to assert "all
+    * inputs drop") infers a non-struct element type and yields no
+    * records. */
   private def localRecords(docs: DataFrame, rows: Seq[Row], field: String): DataFrame = {
     val kv = Seq("key", "value")
     val (schema, recordRows) = docs.select(explode(col(field)).as("rec")).schema("rec").dataType match {

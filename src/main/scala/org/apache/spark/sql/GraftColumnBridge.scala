@@ -77,10 +77,14 @@ object GraftColumnBridge {
     * (pins are eager, so the handoff point is exact and nothing can
     * still need the old blocks). On a reliable `checkpoint()` frame
     * (the `checkpointDir` path) the RDD is not block-persisted and the
-    * unpersist is a no-op — callers need not branch. */
+    * unpersist is a no-op — callers need not branch. Any other frame
+    * is unpersisted when it is cached (an in-query `.cache()` a round
+    * consumed) and left alone otherwise. */
   def releasePin(df: Dataset[Row]): Unit =
     df.queryExecution.analyzed match {
       case l: execution.LogicalRDD => l.rdd.unpersist(blocking = false)
+      case _ if df.storageLevel != org.apache.spark.storage.StorageLevel.NONE =>
+        df.unpersist(blocking = false)
       case _ => ()
     }
 }

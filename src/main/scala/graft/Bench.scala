@@ -218,19 +218,11 @@ object Bench {
     // MACHINE WINDOW (this rig's hypervisor steal varies 25-40% across
     // hours — cross-window comparisons are mush). Unset for the driver:
     // default behavior is byte-identical to before.
-    val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
+    val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY").toSeq
+      .flatMap(_.split(",").map(_.trim).filter(_.nonEmpty))
     // A typo'd subset name would silently run an EMPTY benchmark and
-    // write an empty .subset board — fail loudly with the unknown names
-    // instead (the PlanDump/QueryProfile validation convention).
-    only.foreach { o =>
-      val unknown = o.diff(SparkEntry.benchQueries.toSet)
-      require(unknown.isEmpty,
-        s"SPARK_GRAFT_BENCH_ONLY names not in SparkEntry.benchQueries: " +
-          unknown.toSeq.sorted.mkString(", "))
-    }
-    val names = SparkEntry.benchQueries.filter(SparkEntry.queries.contains)
-      .filter(n => only.forall(_.contains(n)))
+    // write an empty .subset board — select refuses unknown names.
+    val names = SparkEntry.select(only).map(_.name)
 
     def median(xs: Seq[Double]): Double = {
       val ok = xs.filter(_ >= 0)
@@ -449,7 +441,7 @@ object Bench {
       } + 1
       // Subset A/B boards must never masquerade as a full round board
       val sfTag = java.nio.file.Paths.get(sfDir).getFileName.toString +
-        (if (only.isDefined) ".subset" else "")
+        (if (only.nonEmpty) ".subset" else "")
       val dir = java.nio.file.Paths.get("bench_full")
       java.nio.file.Files.createDirectories(dir)
       // Never clobber an existing round file: before the driver commits

@@ -20,25 +20,20 @@ object PlanDump {
     require(args.length >= 3,
       "usage: PlanDump <sfDir> <outDir> <suffix> [queryName ...]")
     val Array(sfDir, outDir, suffix) = args.take(3)
-    val only = args.drop(3).toSet
-    val unknown = only.diff(SparkEntry.queries.keySet)
-    require(unknown.isEmpty,
-      s"unknown query name(s): ${unknown.mkString(", ")}")
+    val specs = SparkEntry.select(args.drop(3).toSeq)
     val spark = Boards.session()
     Files.createDirectories(Paths.get(outDir))
-    val names = SparkEntry.queries.keys.toSeq.sorted
-      .filter(n => only.isEmpty || only(n))
-    for (name <- names) {
-      val out = Paths.get(outDir, s"${name}_$suffix.txt")
+    for (q <- specs) {
+      val out = Paths.get(outDir, s"${q.name}_$suffix.txt")
       try {
-        val df = SparkEntry.queries(name)(spark, sfDir)
+        val df = q.build(spark, sfDir)
         val txt = df.queryExecution.explainString(
           ExplainMode.fromString("formatted"))
         Files.writeString(out, txt)
         // Cleanup any frames the construction pinned (mirrors Bench.run)
         Boards.unpersistAll(spark)
       } catch { case e: Throwable =>
-        System.err.println(s"[plandump] $name failed: ${e.getMessage}")
+        System.err.println(s"[plandump] ${q.name} failed: ${e.getMessage}")
         Files.writeString(out, s"PLAN DUMP FAILED: ${e.getMessage}\n")
       }
     }

@@ -1,8 +1,12 @@
 package graft
 
+import java.util.concurrent.ConcurrentHashMap
 import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerTaskEnd}
+import org.apache.spark.sql.{GraftColumnBridge, SparkSession}
+
+import graft.queries.QuerySpec
 
 /** Optimization-round measurement tool (guide §1): run named queries
   * through the noop sink and report, per query, WHERE the wall time
@@ -17,48 +21,69 @@ object QueryProfile {
   def main(args: Array[String]): Unit = {
     require(args.length >= 2, "usage: QueryProfile <sfDir> <query ...>")
     val sfDir = args.head
-    val names = args.tail.toSeq
-    val unknown = names.filterNot(SparkEntry.queries.contains)
-    require(unknown.isEmpty, s"unknown: ${unknown.mkString(", ")}")
+    val specs = SparkEntry.select(args.tail.toSeq)
     val spark = Boards.session()
+    // Generic warm-up outside the measured set (Bench's convention)
+    try spark.read.parquet(s"$sfDir/events.parquet").count()
+    catch { case _: Throwable => () }
+    run(spark, sfDir, specs)
+    spark.stop()
+  }
 
+  /** Run each of `specs` under a job group of its own and print one JSON
+    * line per query. Only the jobs of that group, and the stages and
+    * tasks those jobs start, are counted, and the listener bus is
+    * drained before a query's line is written, so a job is never counted
+    * against a neighbour however late its events arrive. */
+  def run(spark: SparkSession, sfDir: String, specs: Seq[QuerySpec]): Unit = {
+    val sc = spark.sparkContext
+    specs.foreach { q =>
+      val group = s"queryprofile-${java.util.UUID.randomUUID()}"
+      val counts = new GroupCounts(group)
+      sc.addSparkListener(counts)
+      sc.setJobGroup(group, q.name)
+      val t0 = System.nanoTime()
+      val line =
+        try {
+          q.build(spark, sfDir).write.format("noop").mode("overwrite").save()
+          val wallSec = (System.nanoTime() - t0) / 1e9
+          GraftColumnBridge.drainListenerBus(sc)
+          f"""{"query":${jsonSafe(q.name)},"wall_sec":$wallSec%.3f,""" +
+            s""""jobs":${counts.jobs.get},"stages":${counts.stages.get},""" +
+            s""""tasks":${counts.tasks.get},""" +
+            s""""task_time_sec":${counts.taskMs.get / 1000.0}}"""
+        } catch { case e: Throwable => errorLine(q.name, e.getMessage) }
+        finally {
+          sc.clearJobGroup()
+          sc.removeSparkListener(counts)
+        }
+      println(line)
+      Boards.unpersistAll(spark)
+    }
+  }
+
+  /** Jobs, completed stages, ended tasks and summed task time of the
+    * jobs submitted under job group `group`. A stage belongs to the
+    * group when a job of the group lists it at its start. */
+  private final class GroupCounts(group: String) extends SparkListener {
     val jobs = new AtomicInteger(0)
     val stages = new AtomicInteger(0)
     val tasks = new AtomicInteger(0)
     val taskMs = new AtomicLong(0L)
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit =
+    private val stageIds = ConcurrentHashMap.newKeySet[Int]()
+
+    override def onJobStart(j: SparkListenerJobStart): Unit =
+      if (GraftColumnBridge.jobGroupOf(j.properties) == group) {
         jobs.incrementAndGet()
-      override def onStageCompleted(s: SparkListenerStageCompleted): Unit =
-        stages.incrementAndGet()
-      override def onTaskEnd(t: SparkListenerTaskEnd): Unit = {
-        tasks.incrementAndGet()
-        if (t.taskInfo != null)
-          taskMs.addAndGet(t.taskInfo.duration)
+        j.stageIds.foreach(stageIds.add)
       }
-    })
-
-    // Generic warm-up outside the measured set (Bench's convention)
-    try spark.read.parquet(s"$sfDir/events.parquet").count()
-    catch { case _: Throwable => () }
-
-    for (n <- names) {
-      jobs.set(0); stages.set(0); tasks.set(0); taskMs.set(0L)
-      spark.sparkContext.setJobDescription(n)
-      val t0 = System.nanoTime()
-      try {
-        SparkEntry.queries(n)(spark, sfDir)
-          .write.format("noop").mode("overwrite").save()
-        val wallSec = (System.nanoTime() - t0) / 1e9
-        // give straggler listener events a beat to drain
-        Thread.sleep(200)
-        println(f"""{"query":${jsonSafe(n)},"wall_sec":$wallSec%.3f,""" +
-          s""""jobs":${jobs.get},"stages":${stages.get},""" +
-          s""""tasks":${tasks.get},"task_time_sec":${taskMs.get / 1000.0}}""")
-      } catch { case e: Throwable => println(errorLine(n, e.getMessage)) }
-      Boards.unpersistAll(spark)
-    }
-    spark.stop()
+    override def onStageCompleted(s: SparkListenerStageCompleted): Unit =
+      if (stageIds.contains(s.stageInfo.stageId)) stages.incrementAndGet()
+    override def onTaskEnd(t: SparkListenerTaskEnd): Unit =
+      if (stageIds.contains(t.stageId)) {
+        tasks.incrementAndGet()
+        if (t.taskInfo != null) taskMs.addAndGet(t.taskInfo.duration)
+      }
   }
 
   /** A quoted JSON string of at most 120 characters of `s` (a null

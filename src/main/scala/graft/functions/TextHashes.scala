@@ -377,10 +377,14 @@ case class WordNgrams(child: Expression, n: Int) extends UnaryExpression {
   * n-grams (codegen'd; see [[TextHashes.token_ngrams]]). */
 case class TokenNgrams(child: Expression, n: Int) extends UnaryExpression {
   require(n > 0, s"token_ngrams needs n > 0, got $n")
+  // the kernel reads every element as a string: an array type that
+  // admits null elements is refused here, at analysis, instead of
+  // failing with an NPE on the executor
   override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
+    case ArrayType(StringType, false) => TypeCheckResult.TypeCheckSuccess
     case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires array<string>, got $other")
+      s"$prettyName requires array<string> whose elements cannot be " +
+        s"null (containsNull = false), got $other")
   }
   override def dataType: DataType = ArrayType(StringType, containsNull = false)
   override protected def nullSafeEval(v: Any): Any =

@@ -1100,7 +1100,10 @@ object Dedup {
     * is one slim join bounded by the CLUSTERED docs (a small fraction
     * of any real corpus — left un-hinted so AQE broadcasts it when
     * small, shuffles when a pathological corpus makes it big); the
-    * corpus itself never shuffles. */
+    * corpus itself never shuffles.
+    *
+    * Ids must be non-null and unique: a null or repeated `idCol` fails
+    * the action with an error naming it. */
   def leakFreeSplit(df: DataFrame, idCol: String, textCol: String,
       valPct: Int = 5, testPct: Int = 5,
       k: Int = 5, bands: Int = 16, rowsPerBand: Int = 4,
@@ -1130,8 +1133,22 @@ object Dedup {
     // ids are unique (the same assumption the representative join
     // already leans on), and the joined corpus scan no longer reads
     // the text column at all. The cache is bench/harness-managed.
+    // Those joins would silently drop a null id and multiply a
+    // duplicated one, so each id is counted first (one hash aggregate
+    // of the slim frame by id, whose partitioning a sort-merge join on
+    // id reuses, paid once since the frame is cached), and the action
+    // fails loudly unless every id is non-null and unique.
     val bkt = df.select(col(idCol),
-      TextAnalysis.splitBucket(col(textCol)).as("__own_bucket")).cache()
+        TextAnalysis.splitBucket(col(textCol)).as("__own_bucket"))
+      .groupBy(col(idCol))
+      .agg(count(lit(1)).as("__n"), min(col("__own_bucket")).as("__own_bucket"))
+      .where(assert_true(col(idCol).isNotNull,
+        lit(s"leakFreeSplit: null id in `$idCol`")).isNull &&
+        assert_true(col("__n") === 1,
+          concat(lit(s"leakFreeSplit: duplicate rows for `$idCol` "),
+            col(idCol).cast(StringType))).isNull)
+      .drop("__n")
+      .cache()
     // representative's bucket, one row per member of any cluster
     val repBucket = members.join(
         bkt.select(col(idCol).as("cluster_id"),

@@ -10,7 +10,7 @@ import org.apache.avro.generic.{GenericData, GenericDatumReader, GenericDatumWri
 import org.apache.avro.io.{DecoderFactory, EncoderFactory}
 import org.apache.avro.util.Utf8
 
-import org.apache.spark.sql.{Column, GraftColumnBridge, Row}
+import org.apache.spark.sql.{Column, GraftColumnBridge}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
@@ -264,14 +264,6 @@ object AvroBridge {
     }
   }
 
-  /** Is this Row the struct-of-members encoding of an n-branch union
-    * (the convention [[toSqlTypeNullable]] emits: fields member0..
-    * memberN-1)? Schema-less Rows are assumed member structs — that is
-    * the only positional interpretation available. */
-  private def isMemberStruct(r: Row, n: Int): Boolean =
-    r.schema == null || (r.schema.fieldNames.length == n &&
-      r.schema.fieldNames.zipWithIndex.forall { case (f, i) => f == s"member$i" })
-
   /** GenericData.Fixed performs NO length validation (and the datum
     * writer emits exactly getFixedSize bytes: a long array would
     * silently truncate, a short one would throw an opaque AIOOBE deep
@@ -338,136 +330,6 @@ object AvroBridge {
   def projectValueTo(df: org.apache.spark.sql.DataFrame, valueCol: String,
       target: StructType): org.apache.spark.sql.DataFrame =
     df.withColumn(valueCol, reshape(col(valueCol), df.schema(valueCol).dataType, target))
-
-  // ------------------------------------------------------- row-level (test harness)
-
-  /** GenericRecord -> external Row (for fixtures / golden harness). */
-  def recordToRow(rec: GenericRecord): Row = {
-    val st = toSqlType(rec.getSchema).asInstanceOf[StructType]
-    def conv(v: Any, s: Schema): Any = {
-      if (v == null) return null
-      s.getType match {
-        case STRING | ENUM => v.toString
-        case RECORD => recordToRow(v.asInstanceOf[GenericRecord])
-        case ARRAY =>
-          v.asInstanceOf[java.util.Collection[Any]].asScala.map(conv(_, s.getElementType)).toSeq
-        case UNION =>
-          val nonNull = s.getTypes.asScala.filter(_.getType != NULL).toSeq
-          nonNull match {
-            case Seq(only) => conv(v, only)
-            case many =>
-              val idx = resolveUnionBranch(v, many)
-              Row.fromSeq(many.indices.map(i => if (i == idx) conv(v, many(i)) else null))
-          }
-        case BYTES => v match {
-          case b: java.nio.ByteBuffer =>
-            val a = new Array[Byte](b.remaining()); b.duplicate().get(a); a
-          case a: Array[Byte] => a
-        }
-        case FIXED => v.asInstanceOf[GenericData.Fixed].bytes()
-        case MAP =>
-          v.asInstanceOf[java.util.Map[Any, Any]].asScala
-            .map { case (k, mv) => k.toString -> conv(mv, s.getValueType) }.toMap
-        case _ => v
-      }
-    }
-    Row.fromSeq(rec.getSchema.getFields.asScala.map(f => conv(rec.get(f.pos()), f.schema())).toSeq)
-  }
-
-  /** External Row -> GenericRecord by NAME with projection semantics
-    * (missing -> null, extra -> dropped). Rows must carry a schema
-    * (GenericRowWithSchema), which Spark `collect()` rows do. */
-  def rowToRecord(row: Row, schema: Schema): GenericRecord = {
-    def conv(v: Any, s: Schema): Any = {
-      if (v == null) {
-        if (s.getType == UNION && s.getTypes.asScala.exists(_.getType == NULL)) return null
-        if (s.getType == NULL) return null
-        throw new UnresolvedUnionException(s"null for non-nullable ${s.getType}")
-      }
-      s.getType match {
-        case RECORD => rowToRecord(v.asInstanceOf[Row], s)
-        case ARRAY =>
-          val out = new java.util.ArrayList[Any]()
-          v.asInstanceOf[scala.collection.Seq[Any]].foreach(x => out.add(conv(x, s.getElementType)))
-          out
-        case STRING => v.toString
-        case ENUM =>
-          val sym = v.toString
-          if (!s.getEnumSymbols.asScala.contains(sym))
-            throw new IllegalArgumentException(s"'$sym' not in enum ${s.getFullName}")
-          new GenericData.EnumSymbol(s, sym)
-        case UNION =>
-          val nonNull = s.getTypes.asScala.filter(_.getType != NULL).toSeq
-          nonNull match {
-            case Seq(only) => conv(v, only)
-            case many => v match {
-              case r: Row if isMemberStruct(r, many.size) => // struct-of-members
-                val idx = (0 until many.size).find(i => !r.isNullAt(i)).getOrElse(
-                  throw new UnresolvedUnionException("all union members null"))
-                conv(r.get(idx), many(idx))
-              case r: Row =>
-                // A plain record Row (schema'd, NOT member0..memberN
-                // shaped) against a multi-branch union: dispatch by field
-                // -name coverage. First-record-branch-wins would let the
-                // projection semantics (missing field -> null) bind the
-                // row to the WRONG record branch and silently null its
-                // values; the branch declaring the most of the row's
-                // field names wins (ties -> first branch).
-                val recs = many.zipWithIndex.filter(_._1.getType == RECORD)
-                if (recs.isEmpty) throw new UnresolvedUnionException(
-                  s"Row value but no record branch in union ${many.map(_.getType)}")
-                val (branch, _) = recs.maxBy { case (b, i) =>
-                  (r.schema.fieldNames.count(n => b.getField(n) != null), -i)
-                }
-                conv(r, branch)
-              case plain =>
-                val idx = many.indexWhere(b => runtimeMatches(plain, b))
-                if (idx < 0) throw new UnresolvedUnionException(
-                  s"cannot resolve ${plain.getClass.getSimpleName} against ${many.map(_.getType)}")
-                conv(plain, many(idx))
-            }
-          }
-        case BYTES => java.nio.ByteBuffer.wrap(v.asInstanceOf[Array[Byte]])
-        case FIXED => mkFixed(s, v.asInstanceOf[Array[Byte]])
-        case MAP =>
-          val out = new java.util.HashMap[String, Any]()
-          v.asInstanceOf[scala.collection.Map[String, Any]].foreach {
-            case (k, mv) => out.put(k, conv(mv, s.getValueType))
-          }
-          out
-        case LONG => v match { case i: Int => i.toLong; case x => x }
-        case DOUBLE => v match { case f: Float => f.toDouble; case x => x }
-        case _ => v
-      }
-    }
-    val rec = new GenericData.Record(schema)
-    val hasSchema = row.schema != null
-    schema.getFields.asScala.foreach { f =>
-      val v =
-        if (hasSchema) {
-          val i = row.schema.fieldNames.indexOf(f.name())
-          if (i < 0) null else row.get(i)
-        } else row.get(f.pos())
-      rec.put(f.pos(), conv(v, f.schema()))
-    }
-    rec
-  }
-
-  private def runtimeMatches(v: Any, b: Schema): Boolean = (b.getType, v) match {
-    case (BOOLEAN, _: Boolean) => true
-    case (INT, _: Int) => true
-    case (LONG, _: Long) | (LONG, _: Int) => true
-    case (FLOAT, _: Float) => true
-    case (DOUBLE, _: Double) | (DOUBLE, _: Float) => true
-    case (STRING, _: String) => true
-    case (ENUM, s: String) => b.getEnumSymbols.asScala.contains(s)
-    case (BYTES, _: Array[Byte]) => true
-    case (FIXED, a: Array[Byte]) => a.length == b.getFixedSize
-    case (RECORD, _: Row) => true
-    case (ARRAY, _: scala.collection.Seq[_]) => true
-    case (MAP, _: scala.collection.Map[_, _]) => true
-    case _ => false
-  }
 
   // --------------------------------------------------------- binary avro
 

@@ -1,17 +1,29 @@
 package org.apache.spark.sql
 
+import org.apache.spark.SparkContext
 import org.apache.spark.sql.catalyst.expressions.Expression
 
 /** Spark 4.x moved `Column` to a ColumnNode facade; wrapping a raw
   * Catalyst [[Expression]] into a [[Column]] (the old `new Column(expr)`)
   * now lives in `org.apache.spark.sql.classic.ExpressionUtils`, which is
   * `private[sql]`. This shim lives inside the `org.apache.spark.sql`
-  * package purely to re-export those two conversions for graft's custom
-  * expressions (public Spark API surface otherwise).
+  * package to re-export those two conversions for graft's custom
+  * expressions, and the few other package-private calls graft needs
+  * (public Spark API surface otherwise).
   */
 object GraftColumnBridge {
   def column(e: Expression): Column = classic.ExpressionUtils.column(e)
   def expression(c: Column): Expression = classic.ExpressionUtils.expression(c)
+
+  /** Block until the listener bus has delivered every event posted so
+    * far (`LiveListenerBus.waitUntilEmpty` is `private[spark]`). */
+  def drainListenerBus(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
+
+  /** The job group a job was submitted under, from the properties its
+    * `SparkListenerJobStart` carries; null outside any group. */
+  def jobGroupOf(props: java.util.Properties): String =
+    if (props == null) null
+    else props.getProperty(SparkContext.SPARK_JOB_GROUP_ID)
 
   /** A stats-compounding cap on `sizeInBytes` stamps. Any value at or
     * above this is equally "do not broadcast" to the planner (the

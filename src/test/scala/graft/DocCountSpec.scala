@@ -8,19 +8,19 @@ import org.scalatest.matchers.should.Matchers
   * flagged by the round-13 and round-15 judges (docs said 180/195
   * while the board had grown) and regressed once because the fix was
   * manual; this spec makes it impossible to recur silently. Also pins
-  * the three registries (queries, oracles, bench list) to the same
-  * key set, so a new query can't ship with a missing oracle or bench
-  * entry (the driver gate would score it rows-only). */
+  * the run-order list to the registry, so a new query can't ship
+  * without a place in [[SparkEntry.benchQueries]] (it would never be
+  * dumped, benched or oracle-checked). */
 class DocCountSpec extends AnyFunSuite with Matchers {
 
   private def read(name: String): String =
     new String(java.nio.file.Files.readAllBytes(
       java.nio.file.Paths.get(name)), java.nio.charset.StandardCharsets.UTF_8)
 
-  test("queries, oracleSql, and benchQueries agree key-for-key") {
-    SparkEntry.oracleSql.keySet shouldBe SparkEntry.queries.keySet
-    SparkEntry.benchQueries.toSet shouldBe SparkEntry.queries.keySet
-    SparkEntry.benchQueries.size shouldBe SparkEntry.benchQueries.distinct.size
+  test("registered names are distinct; benchQueries is a permutation") {
+    val names = SparkEntry.specs.map(_.name)
+    names.distinct shouldBe names
+    SparkEntry.benchQueries.sorted shouldBe names.sorted
   }
 
   test("README.md's registered-query count matches the registry") {

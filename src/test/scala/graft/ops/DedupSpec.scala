@@ -419,6 +419,31 @@ class DedupSpec extends SparkSpecBase with org.scalatest.matchers.should.Matcher
     e.getMessage should include("__own_bucket")
   }
 
+  test("leakFreeSplit fails loudly on a null id instead of dropping " +
+      "the row") {
+    val corpus = Seq[(java.lang.Long, String)](
+      (1L, "a first document about rivers"),
+      (null, "a second document about mountains"))
+      .toDF("doc_id", "text")
+    val ex = intercept[Exception](
+      Dedup.leakFreeSplit(corpus, "doc_id", "text").collect())
+    (ex.getMessage + Option(ex.getCause).map(_.getMessage).mkString) should
+      include("null id")
+  }
+
+  test("leakFreeSplit fails loudly on a duplicated id instead of " +
+      "multiplying its rows") {
+    val corpus = Seq(
+      (1L, "a first document about rivers"),
+      (2L, "a second document about mountains"),
+      (2L, "a third document about deserts"))
+      .toDF("doc_id", "text")
+    val ex = intercept[Exception](
+      Dedup.leakFreeSplit(corpus, "doc_id", "text").collect())
+    (ex.getMessage + Option(ex.getCause).map(_.getMessage).mkString) should
+      include("duplicate rows for `doc_id` 2")
+  }
+
   test("embeddingCrossContamination pairs cross corpora only and " +
       "confirms on exact cosine") {
     val corpus = Seq(

@@ -146,6 +146,20 @@ class TextAnalysisSpec extends SparkSpecBase with org.scalatest.matchers.should.
     }
   }
 
+  test("token_ngrams refuses a token array whose elements may be null " +
+      "at analysis, instead of an NPE on the executor") {
+    import graft.functions.TextHashes.token_ngrams
+    val e = intercept[org.apache.spark.sql.AnalysisException] {
+      spark.range(1)
+        .select(token_ngrams(expr("array('a', null, 'b')"), 2))
+        .collect()
+    }
+    e.getMessage should include("containsNull = false")
+    spark.range(1)
+      .select(token_ngrams(expr("array('a', 'b', 'c')"), 2))
+      .as[Seq[String]].head() shouldBe Seq("a b", "b c")
+  }
+
   test("chunkDocuments windows cover the text with the stated overlap; " +
       "short docs are one chunk, empty docs none") {
     val df = Seq((1L, "abcdefghij"), (2L, "abc"), (3L, "")).toDF("id", "text")

@@ -1,7 +1,10 @@
 package graft.types
 
 import org.apache.avro.Schema
+import org.apache.avro.generic.GenericRecord
 import org.apache.spark.sql.Row
+import org.apache.spark.sql.catalyst.CatalystTypeConverters
+import org.apache.spark.sql.catalyst.expressions.Literal
 import org.apache.spark.sql.types._
 
 import graft.SparkSpecBase
@@ -10,17 +13,12 @@ import graft.SparkSpecBase
   * (AllFieldTypesTest.scala:13-196): enum round-trip, nullable-string
   * unions with field-drop->nil, all primitives + arrays round-trip through
   * real binary Avro, multi-branch union runtime resolution, and the
-  * unresolvable-union error. Every Avro record goes through real binary
-  * encode/decode (the reference's `reserializeObj` discipline,
-  * TestUtils.scala:53-69). */
+  * unresolvable-union error. Every value goes through real binary Avro
+  * by the AvroEncode / AvroDecode expressions the pipeline runs (the
+  * reference's `reserializeObj` discipline, TestUtils.scala:53-69). */
 class AvroBridgeSpec extends SparkSpecBase {
 
   private def parse(s: String) = new Schema.Parser().parse(s)
-
-  private def roundTrip(rec: org.apache.avro.generic.GenericRecord) = {
-    val bytes = AvroBridge.serialize(rec)
-    AvroBridge.deserialize(bytes, rec.getSchema)
-  }
 
   // all-primitives + arrays record (AllFieldTypesTest.scala:60-71 shape)
   private val allTypes = parse("""
@@ -61,7 +59,28 @@ class AvroBridgeSpec extends SparkSpecBase {
     assert(st("multi").nullable)
   }
 
+  /** `row`, typed `rowType`, through the AvroEncode path `encodeAvro`
+    * runs, then read back off the wire as a record of `s`. */
+  private def encode(row: Row, rowType: StructType, s: Schema): GenericRecord = {
+    val internal = CatalystTypeConverters.createToCatalystConverter(rowType)(row)
+    AvroBridge.deserialize(
+      AvroEncode(Literal.create(null, rowType), s.toString).encode(internal), s)
+  }
+
+  private def encode(row: Row, s: Schema): GenericRecord =
+    encode(row, AvroBridge.toSqlType(s).asInstanceOf[StructType], s)
+
+  /** `rec` written to the wire and read back through the AvroDecode path
+    * `decodeAvro` runs, as an external Row. */
+  private def decode(rec: GenericRecord): Row = {
+    val st = AvroBridge.toSqlType(rec.getSchema)
+    val internal = AvroDecode(Literal.create(null, BinaryType),
+      rec.getSchema.toString).decode(AvroBridge.serialize(rec))
+    CatalystTypeConverters.createToScalaConverter(st)(internal).asInstanceOf[Row]
+  }
+
   test("row round-trip through real binary avro: all field types") {
+    import org.apache.spark.sql.functions.col
     val rec = new org.apache.avro.generic.GenericData.Record(allTypes)
     rec.put("boolean", true); rec.put("int", 42); rec.put("long", 42L)
     rec.put("float", 1.5f); rec.put("double", 2.5d); rec.put("string", "s")
@@ -70,17 +89,20 @@ class AvroBridgeSpec extends SparkSpecBase {
       allTypes.getField("bananas").schema().getElementType)
     b.put("color", "yellow"); b.put("weight", 0.3f)
     rec.put("bananas", java.util.Arrays.asList(b))
+    val bytes = AvroBridge.serialize(rec)
 
-    val row = AvroBridge.recordToRow(roundTrip(rec))
-    assert(row == Row(true, 42, 42L, 1.5f, 2.5d, "s", Seq("a", "b"),
-      Seq(Row("yellow", 0.3f))))
+    val decoded = spark.createDataFrame(
+        java.util.Arrays.asList(Row(bytes)),
+        StructType(Seq(StructField("value", BinaryType))))
+      .select(AvroBridge.decodeAvro(col("value"), allTypes).as("value"))
+    assert(decoded.collect()(0).getStruct(0) == Row(true, 42, 42L, 1.5f,
+      2.5d, "s", Seq("a", "b"), Seq(Row("yellow", 0.3f))))
 
-    // back: row -> record -> binary -> record
-    val rec2 = roundTrip(AvroBridge.rowToRecord(
-      new org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema(
-        row.toSeq.toArray, AvroBridge.toSqlType(allTypes).asInstanceOf[StructType]),
-      allTypes))
-    assert(AvroBridge.recordToRow(rec2) == row)
+    // back: struct -> binary avro, byte-identical to the original wire
+    val back = decoded
+      .select(AvroBridge.encodeAvro(col("value"), allTypes))
+      .collect()(0).getAs[Array[Byte]](0)
+    assert(back.toSeq == bytes.toSeq)
   }
 
   test("enum round-trips; invalid symbol rejected (AllFieldTypesTest:13-29)") {
@@ -91,17 +113,9 @@ class AvroBridgeSpec extends SparkSpecBase {
     val rec = new org.apache.avro.generic.GenericData.Record(s)
     rec.put("queue", new org.apache.avro.generic.GenericData.EnumSymbol(
       s.getField("queue").schema(), "Kafka"))
-    val row = AvroBridge.recordToRow(roundTrip(rec))
-    assert(row == Row("Kafka"))
-    val back = AvroBridge.rowToRecord(
-      new org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema(
-        Array("NATS"), AvroBridge.toSqlType(s).asInstanceOf[StructType]), s)
-    assert(roundTrip(back).get("queue").toString == "NATS")
-    intercept[IllegalArgumentException] {
-      AvroBridge.rowToRecord(
-        new org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema(
-          Array("RabbitMQ"), AvroBridge.toSqlType(s).asInstanceOf[StructType]), s)
-    }
+    assert(decode(rec) == Row("Kafka"))
+    assert(encode(Row("NATS"), s).get("queue").toString == "NATS")
+    intercept[IllegalArgumentException] { encode(Row("RabbitMQ"), s) }
   }
 
   test("output projection: missing field -> null, extra dropped (AllFieldTypesTest:31-57)") {
@@ -111,13 +125,11 @@ class AvroBridgeSpec extends SparkSpecBase {
         {"name":"optstring0","type":["null","string"]},
         {"name":"optstring1","type":["null","string"]},
         {"name":"mandstring","type":"string"}]}""")
-    val inRow = new org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema(
-      Array("keep", "mand", "extra-dropped"),
+    val rec = encode(Row("keep", "mand", "extra-dropped"),
       StructType(Seq(
         StructField("optstring0", StringType),
         StructField("mandstring", StringType),
-        StructField("ignored", StringType))))
-    val rec = roundTrip(AvroBridge.rowToRecord(inRow, out))
+        StructField("ignored", StringType))), out)
     assert(rec.get("optstring0").toString == "keep")
     assert(rec.get("optstring1") == null) // "this makes optstring1 nil"
     assert(rec.get("mandstring").toString == "mand")
@@ -127,27 +139,20 @@ class AvroBridgeSpec extends SparkSpecBase {
     val s = parse("""
       {"type":"record","name":"t","fields":[
         {"name":"a","type":["null","boolean","int","long","float","double","string"]}]}""")
-    // encode a long via the plain-value runtime dispatch
-    val st = AvroBridge.toSqlType(s).asInstanceOf[StructType]
-    val membered = Row(null, null, 42L, null, null, null)
-    val rec = roundTrip(AvroBridge.rowToRecord(
-      new org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema(
-        Array(membered), st), s))
+    // encode a long: the single non-null member picks the branch
+    val rec = encode(Row(Row(null, null, 42L, null, null, null)), s)
     assert(rec.get("a") == 42L)
     // decode side: the value lands in the right member slot
-    val row = AvroBridge.recordToRow(rec)
-    assert(row.getStruct(0) == Row(null, null, 42L, null, null, null))
+    assert(decode(rec).getStruct(0) == Row(null, null, 42L, null, null, null))
   }
 
   test("unresolvable union throws (AllFieldTypesTest:176-196)") {
     val s = parse("""
       {"type":"record","name":"t","fields":[
         {"name":"a","type":["int","string"]}]}""")
-    val st = AvroBridge.toSqlType(s).asInstanceOf[StructType]
     intercept[UnresolvedUnionException] {
-      AvroBridge.rowToRecord(
-        new org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema(
-          Array(Row(null, null)), st), s) // both members null, union has no null branch
+      // both members null, union has no null branch
+      encode(Row(Row(null, null)), s)
     }
   }
 
@@ -156,54 +161,16 @@ class AvroBridgeSpec extends SparkSpecBase {
     val s = parse("""
       {"type":"record","name":"t","fields":[
         {"name":"fx","type":{"type":"fixed","name":"Fx","size":4}}]}""")
-    val st = AvroBridge.toSqlType(s).asInstanceOf[StructType]
-    def rowOf(bytes: Array[Byte]) =
-      new org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema(
-        Array[Any](bytes), st)
-    // exact size passes both row and catalyst paths
-    AvroBridge.serialize(AvroBridge.rowToRecord(rowOf(Array[Byte](1, 2, 3, 4)), s))
+    // exact size passes
+    encode(Row(Array[Byte](1, 2, 3, 4)), s)
     // long input must throw, not silently truncate to 4 bytes on the wire
     val e = intercept[IllegalArgumentException] {
-      AvroBridge.rowToRecord(rowOf(Array.fill[Byte](16)(0)), s)
+      encode(Row(Array.fill[Byte](16)(0)), s)
     }
     assert(e.getMessage.contains("4"))
     intercept[IllegalArgumentException] { // short input: would AIOOBE deep in the encoder
-      AvroBridge.rowToRecord(rowOf(Array[Byte](1, 2)), s)
+      encode(Row(Array[Byte](1, 2)), s)
     }
-  }
-
-  test("plain record Row against a multi-record union dispatches by " +
-      "field-name coverage, not first-branch-wins") {
-    val s = parse("""
-      {"type":"record","name":"t","fields":[
-        {"name":"u","type":[
-          {"type":"record","name":"RecA","fields":[
-            {"name":"a","type":["null","long"]}]},
-          {"type":"record","name":"RecB","fields":[
-            {"name":"b","type":"string"}]}]}]}""")
-    val st = AvroBridge.toSqlType(s).asInstanceOf[StructType]
-    // a Row carrying field "b" — NOT member0/member1 shaped — must bind
-    // to RecB; first-match would bind RecA and null-project "b" away
-    val bRow = new org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema(
-      Array[Any]("hello"),
-      StructType(Seq(StructField("b", StringType))))
-    val rec = AvroBridge.rowToRecord(
-      new org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema(
-        Array[Any](bRow), st), s)
-    val u = rec.get("u").asInstanceOf[org.apache.avro.generic.GenericRecord]
-    assert(u.getSchema.getName == "RecB")
-    assert(u.get("b") == "hello")
-    // the member-struct convention (schema'd member0/member1 Row) still
-    // routes positionally
-    val memberRow = new org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema(
-      Array[Any](null, Row("m")),
-      StructType(Seq(StructField("member0", st("u").dataType), // shape irrelevant for null
-        StructField("member1", StructType(Seq(StructField("b", StringType)))))))
-    val rec2 = AvroBridge.rowToRecord(
-      new org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema(
-        Array[Any](memberRow), st), s)
-    val u2 = rec2.get("u").asInstanceOf[org.apache.avro.generic.GenericRecord]
-    assert(u2.getSchema.getName == "RecB" && u2.get("b") == "m")
   }
 
   test("column-level decode/encode: from_avro/to_avro analogues") {

@@ -24,13 +24,16 @@ object Boards {
     spark
   }
 
-  /** Drop every persisted RDD. Iterative ops pin frames (cache /
-    * localCheckpoint) whose blocks outlive the query in one shared JVM;
-    * each query then starts from a clean block store, as on a cluster
-    * whose executors release on exit. */
-  def unpersistAll(spark: SparkSession): Unit =
+  /** Drop every cached frame and every persisted RDD. Iterative ops pin
+    * frames (cache / localCheckpoint) whose blocks outlive the query in
+    * one shared JVM; each query then starts from a clean block store and
+    * an empty cache manager, as on a cluster whose executors release on
+    * exit, so no later plan reads a dead cache entry. */
+  def unpersistAll(spark: SparkSession): Unit = {
+    spark.catalog.clearCache()
     spark.sparkContext.getPersistentRDDs.values
       .foreach(_.unpersist(blocking = false))
+  }
 
   /** `s` as a quoted JSON string: backslash, quote and every control
     * character below U+0020 escaped, so any message or query text

@@ -153,10 +153,12 @@ object Main {
     serde match {
       case Some(kv) =>
         // Kafka-shaped binary frame expected; absent key column = void key.
+        // A frame the serde rejects is dropped ahead of the chain; a
+        // tombstone (null value) stays a null value.
         val withKey =
           if (raw.columns.contains("key")) raw
           else raw.withColumn("key", lit(null).cast(BinaryType))
-        kv.decode(withKey)
+        kv.decode(kv.dropRejected(withKey))
       case None =>
         if (raw.columns.toSeq == Seq("key", "value")) raw
         else if (raw.columns.contains("value") && !raw.columns.contains("key"))

@@ -18,6 +18,17 @@ import graft.types.AvroBridge
   * binary column into a typed column, encode turns a typed column back
   * into binary for the sink. All decode/encode paths are Catalyst
   * expressions (casts + codegen'd codecs), not per-record interpreters.
+  *
+  * Each frame is decoded once, as a Kafka deserializer does: an Avro
+  * side puts the decode under a [[DecodeBarrier]], so a chain filter on
+  * `value.*` fields reads the decoded column instead of taking a copy of
+  * the decode for each field it names. The long, string and void serdes
+  * are single casts and keep the plain plan.
+  *
+  * A frame the serde rejects (a registry-framed key or value that is
+  * non-null but does not carry the declared schema id) is dropped ahead
+  * of the chain ([[KeyValueMapping.dropRejected]]); a null value, a
+  * Kafka tombstone, is no rejection and stays a null value.
   */
 sealed trait MappingType {
   /** Spark type this serde produces on decode. */
@@ -26,6 +37,9 @@ sealed trait MappingType {
   def decode(c: Column): Column
   /** typed column -> binary column (Kafka serializer analogue). */
   def encode(c: Column): Column
+  /** Which raw frames [[decode]] can read, as a predicate over the binary
+    * column; `None` when it reads every frame. */
+  def accepts(c: Column): Option[Column] = None
 }
 
 /** Kafka LongSerde: 8-byte big-endian two's complement
@@ -74,24 +88,26 @@ final case class AvroMapping(schema: Schema) extends MappingType {
   * 5-byte header (a plan-time literal concat); decode accepts only
   * frames carrying exactly this id — a live registry resolves ANY id to
   * its schema for reader-side evolution, but offline the static binding
-  * makes an id mismatch a NULL (the engine's drop-record semantics)
-  * instead of a misdecoded body. Declare as `avro=<file>@<id>`, or bind
+  * makes an id mismatch a NULL decode instead of a misdecoded body, and
+  * [[accepts]] lets the runtime drop such a frame before the chain sees
+  * it (drop-record semantics). Declare as `avro=<file>@<id>`, or bind
   * from a registry snapshot via [[ConfluentAvroMapping.fromRegistry]].
   * All framing runs in codegen'd Column expressions; the registry is
   * never consulted per row. */
 final case class ConfluentAvroMapping(schema: Schema, schemaId: Int)
     extends MappingType {
   def sqlType: DataType = AvroBridge.toSqlType(schema)
-  def decode(c: Column): Column = {
-    val body = when(
-      BinaryCodec.confluent_schema_id(c) === lit(schemaId.toLong),
-      BinaryCodec.strip_confluent_header(c))
-      .otherwise(lit(null).cast(org.apache.spark.sql.types.BinaryType))
-    AvroBridge.decodeAvro(body, schema)
-  }
+  /** An id match implies a framed value, so the header is tested once;
+    * any other frame decodes to null. */
+  def decode(c: Column): Column =
+    AvroBridge.decodeAvro(when(hasId(c), substring(c, 6, Int.MaxValue)), schema)
   def encode(c: Column): Column =
     BinaryCodec.add_confluent_header(
       AvroBridge.encodeAvro(c, schema), schemaId)
+  /** A tombstone (null) or a frame carrying `schemaId`. */
+  override def accepts(c: Column): Option[Column] = Some(c.isNull || hasId(c))
+  private def hasId(c: Column): Column =
+    BinaryCodec.confluent_schema_id(c) === lit(schemaId.toLong)
 }
 
 object ConfluentAvroMapping {
@@ -136,11 +152,26 @@ object MappingType {
 /** Key/value serde pair (reference: KeyValueType, TypeConversions.scala:18,
   * 42-51 — `"v"` means void key, `"k,v"` declares both). */
 final case class KeyValueMapping(key: MappingType, value: MappingType) {
-  /** Kafka-shaped frame (binary key/value) -> typed (key, value) frame. */
-  def decode(df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
-    df.select(
+  /** Kafka-shaped frame (binary key/value) -> typed (key, value) frame,
+    * one row per input row. An Avro side puts the decode under a
+    * [[DecodeBarrier]], so a filter on the result reads the decoded
+    * column instead of decoding again. */
+  def decode(df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
+    val decoded = df.select(
       key.decode(col("key")).as("key"),
       value.decode(col("value")).as("value"))
+    val avro = Seq(key, value).exists {
+      case _: AvroMapping | _: ConfluentAvroMapping => true
+      case _ => false
+    }
+    if (avro) DecodeBarrier.over(decoded) else decoded
+  }
+  /** `df` without the frames a side's decode rejects (see
+    * [[MappingType.accepts]]); tested on the raw columns, before any
+    * decode. */
+  def dropRejected(df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
+    (key.accepts(col("key")) ++ value.accepts(col("value")))
+      .reduceOption(_ && _).fold(df)(df.filter)
   /** Typed (key, value) frame -> Kafka-shaped binary frame. */
   def encode(df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
     df.select(

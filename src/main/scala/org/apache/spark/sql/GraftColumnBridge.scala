@@ -15,6 +15,11 @@ object GraftColumnBridge {
   def column(e: Expression): Column = classic.ExpressionUtils.column(e)
   def expression(c: Column): Expression = classic.ExpressionUtils.expression(c)
 
+  /** A frame over a logical plan built outside the Dataset API
+    * (`Dataset.ofRows` is `private[sql]`). */
+  def ofRows(spark: SparkSession, plan: catalyst.plans.logical.LogicalPlan): DataFrame =
+    classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
+
   /** Block until the listener bus has delivered every event posted so
     * far (`LiveListenerBus.waitUntilEmpty` is `private[spark]`). */
   def drainListenerBus(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()

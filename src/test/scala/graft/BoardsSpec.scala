@@ -78,4 +78,16 @@ class BoardsSpec extends SparkSpecBase with Matchers {
       profile() shouldBe first
     } finally spark.sparkContext.removeSparkListener(slow)
   }
+
+  test("the per-query clean-up drops cache entries with their blocks, so " +
+      "the next query is not planned over a dead cache") {
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    def fragment = spark.range(100).toDF("x").filter("x % 3 = 0")
+    fragment.cache().count()
+    Boards.unpersistAll(spark)
+    spark.sharedState.cacheManager.isEmpty shouldBe true
+    val next = fragment.groupBy().count()
+    physicalPlan(next).collect { case s: InMemoryTableScanExec => s } shouldBe empty
+    next.collect()(0).getLong(0) shouldBe 34L
+  }
 }

@@ -1,12 +1,20 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.scalatest.funsuite.AnyFunSuite
 
 /** One shared local session per suite (guide: one SparkSession per suite). */
 trait SparkSpecBase extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSpecBase.session
   def sf(dir: String = "sf0.001"): String = s"/root/testdata/$dir"
+
+  /** `df`'s physical plan, out of its adaptive-execution wrapper. */
+  def physicalPlan(df: DataFrame): SparkPlan = df.queryExecution.executedPlan match {
+    case a: AdaptiveSparkPlanExec => a.executedPlan
+    case p => p
+  }
 }
 
 object SparkSpecBase {

@@ -151,6 +151,63 @@ class SerdeSpec extends SparkSpecBase {
       "bad_magic" -> true, "truncated" -> true))
   }
 
+  private val eventSchema = new Schema.Parser().parse(
+    """{"type":"record","name":"Event","fields":[
+      |{"name":"id","type":"long"},
+      |{"name":"kind","type":{"type":"enum","name":"Kind","symbols":["CLICK","REFUND"]}},
+      |{"name":"user","type":{"type":"record","name":"User","fields":[
+      |  {"name":"name","type":"string"}]}},
+      |{"name":"amount_cents","type":["null","long"],"default":null},
+      |{"name":"qty","type":"int"}]}""".stripMargin)
+
+  private val restructuredSchema = new Schema.Parser().parse(
+    """{"type":"record","name":"Out","fields":[
+      |{"name":"id","type":"long"},{"name":"user","type":"string"},
+      |{"name":"total_cents","type":["null","long"],"default":null}]}"""
+      .stripMargin)
+
+  private def avroDecodes(df: org.apache.spark.sql.DataFrame): Int =
+    physicalPlan(df).collect { case p =>
+      p.expressions.map(_.collect { case d: graft.types.AvroDecode => d }.size).sum
+    }.sum
+
+  test("decode -> filter -> mapValues -> encode decodes each frame once: " +
+      "the filter on value.* fields is not pushed below the Avro decode") {
+    val spark0 = spark
+    import spark0.implicits._
+    val in = ConfluentAvroMapping(eventSchema, 3)
+    val dir = java.nio.file.Files.createTempDirectory("graft-once").toString
+    Seq((1L, "CLICK", "ann", Some(250L), 2), (2L, "REFUND", "bob", None, 1),
+        (3L, "CLICK", "eve", None, 4))
+      .toDF("id", "kind", "name", "amount_cents", "qty")
+      .select(BinaryCodec.long_to_binary(col("id")).as("key"),
+        in.encode(struct(col("id"), col("kind"), struct(col("name")).as("user"),
+          col("amount_cents"), col("qty"))).as("value"))
+      .write.mode("overwrite").parquet(dir)
+    val pipeline = graft.runtime.GraftScript.parse(
+      "filter value is not null and value.kind <> 'REFUND'\n" +
+        "mapValues named_struct('id', value.id, 'user', upper(value.user.name), " +
+        "'total_cents', value.amount_cents * value.qty)\n")
+    val kvIn = KeyValueMapping(LongMapping, in)
+    val kvOut = KeyValueMapping(LongMapping, ConfluentAvroMapping(restructuredSchema, 4))
+    val out = kvOut.encode(pipeline.compile(kvIn.decode(spark.read.parquet(dir))))
+    assert(avroDecodes(out) == 1)
+    val back = kvOut.decode(out).select(col("value.*")).as[(Long, String, Option[Long])]
+      .collect().toSeq.sortBy(_._1)
+    assert(back == Seq((1L, "ANN", Some(500L)), (3L, "EVE", None)))
+  }
+
+  test("only an Avro side puts the decode under a barrier") {
+    val df = spark.createDataFrame(
+      java.util.Collections.emptyList[Row](), kafkaShape)
+    def barriers(kv: KeyValueMapping): Int =
+      kv.decode(df).queryExecution.analyzed.collect { case b: DecodeBarrier => b }.size
+    assert(barriers(KeyValueMapping.fromString("long,string")) == 0)
+    assert(barriers(KeyValueMapping(VoidMapping, StringMapping)) == 0)
+    assert(barriers(KeyValueMapping(LongMapping, AvroMapping(userSchema))) == 1)
+    assert(barriers(KeyValueMapping(LongMapping, ConfluentAvroMapping(userSchema, 7))) == 1)
+  }
+
   test("avro=file@id parses to the framed mapping; registry snapshot " +
       "directory binds by id (FileSchemaRegistry)") {
     val dir = java.nio.file.Files.createTempDirectory("graft-reg")
